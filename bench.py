@@ -39,7 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REFERENCE_BASELINE_DOCS_PER_SEC = 0.98  # single-core pdf4py full-graph parse
                                         # (SURVEY.md §6, measured)
-ROUND = "5"  # default suffix for BENCH/QUERIES_r{N}.json
+ROUND = "7"  # default suffix for BENCH/QUERIES_r{N}.json
 
 
 def build_session(cpus: int):
@@ -101,7 +101,13 @@ def bench_extract(spark, copies: int):
     # spreads the heavy-document tail (2.5 MB PDFs ~2 s each) across
     # cores, WITHOUT the per-task overhead of doc-level splitting —
     # measured on this box: 1800 tasks at 8 cores costs +50% wall vs 64,
-    # and 1800 at 32 cores +27% vs 256 (round-2 partition sweep)
+    # and 1800 at 32 cores +27% vs 256 (round-2 partition sweep). The
+    # overhead is a fixed cost per task. On a 4-core box (Python 3.11) its
+    # largest part was Spark's importlib.invalidate_caches() at each task
+    # start, which re-read pyspark.zip, the py4j zip and the spark-core jar
+    # once per cached zipimporter (~0.22 s a task at 4 concurrent tasks),
+    # until the kernel began dropping those importers
+    # (plans.pipeline._drop_zip_importers)
     cpus = spark.sparkContext.defaultParallelism
     n_parts = min(max(cpus * 8, 8), 4096)
     start = time.perf_counter()

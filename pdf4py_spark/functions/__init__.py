@@ -28,9 +28,11 @@ def dispatch_kind(payload: Column = None) -> Column:
 
 
 def size_bucket(payload: Column = None) -> Column:
-    """log2 byte-size bucket: docs of similar cost land together so Arrow
-    batch memory stays bounded and stragglers cluster predictably
-    (SURVEY.md §2.3 D5 — measured 77% of parse time in 3/22 docs)."""
+    """log2 byte-size bucket, one of balanced_repartition's two hash keys.
+    Hashed together with the per-url salt it does not co-locate docs of
+    similar size: every doc lands in an effectively random partition, so
+    the heavy tail (SURVEY.md §2.3 D5 — measured 77% of parse time in
+    3/22 docs) spreads across partitions instead of clustering."""
     payload = F.col("html") if payload is None else payload
     return F.ceil(F.log2(F.octet_length(payload) + F.lit(1))).cast("int")
 

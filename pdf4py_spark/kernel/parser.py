@@ -43,7 +43,11 @@ class ObjectScanner:
     #: single function — the former parse/_parse_inner split paid a second
     #: call per parsed object, ~6% of kernel wall), so 200 levels = ~200
     #: frames — comfortable under the default 1000 even inside a pyspark
-    #: worker with harness frames below (ADVICE r2)
+    #: worker with harness frames below (ADVICE r2). The raw-text fast
+    #: path in textextract.py shares this limit but pays TWO frames per
+    #: dict nesting level (consume_dict -> consume_value -> consume_dict),
+    #: so a 200-deep dict chain there uses ~400 frames: still under the
+    #: default limit, with half the headroom
     MAX_NESTING = 200
 
     def __init__(self, payload, stream_resolver=None, content_mode=True):

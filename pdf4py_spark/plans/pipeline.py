@@ -23,7 +23,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
+import zipimport
 
 import pandas as pd
 
@@ -46,6 +48,27 @@ EXTRACT_SCHEMA = (
 _EXTRACT_COLS = [c.split()[0] for c in EXTRACT_SCHEMA.split(", ")]
 
 
+def _drop_zip_importers():
+    """Delete every zipimporter from ``sys.path_importer_cache``.
+
+    A reused Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``pyspark.worker_util.setup_spark_files``). Spark
+    puts pyspark.zip, the py4j zip and the spark-core jar on the worker's
+    sys.path, which leaves ~15 zipimporter entries in the cache (each
+    archive plus one per imported subpackage), and on Python 3.11
+    ``zipimporter.invalidate_caches()`` re-reads the archive's whole
+    central directory: ~5 ms per pyspark.zip entry, ~22 ms per jar entry,
+    ~0.22 s per task with 4 tasks running at once. The cache is documented
+    as clearable; a later import rebuilds an entry from
+    ``zipimport._zip_directory_cache`` without re-reading the archive, so
+    the next task in this worker invalidates only FileFinder entries.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def _make_extract_batches(text_mode: str = "raw"):
     """The Arrow kernel: one Python call per batch; per row it dispatches
     the payload to the PDF or HTML path (kernel.extract.extract_document).
@@ -56,6 +79,7 @@ def _make_extract_batches(text_mode: str = "raw"):
     def _extract_batches(batches):
         from pdf4py_spark.kernel.extract import extract_document
 
+        _drop_zip_importers()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         for pdf in batches:
@@ -117,9 +141,10 @@ def extract_pages(pages: DataFrame, num_partitions: int = None,
         slim = slim.join(F.broadcast(passwords), "url", "left")
     if num_partitions is None:
         # oversplit: per-document kernel cost varies ~1000x between a tiny
-        # HTML page and a 2.5 MB PDF, and docs of similar size share a
-        # range partition — many small partitions keep every core busy
-        # instead of leaving one straggler with all the heavy documents
+        # HTML page and a 2.5 MB PDF, and balanced_repartition hashes
+        # (size_bucket, per-url salt), so each doc lands in an effectively
+        # random partition — many small partitions spread the heavy docs
+        # over every core instead of leaving one straggler with several
         num_partitions = slim.sparkSession.sparkContext.defaultParallelism * 8
     balanced = balanced_repartition(slim, num_partitions)
     return balanced.mapInPandas(_make_extract_batches(text_mode),

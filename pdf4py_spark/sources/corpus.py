@@ -3,7 +3,9 @@
 (url, warc_ts, html, text, lang) — see /root/repo/FIXTURES.md §1.
 
 All payloads come from the read-only reference checkout or fixed literals;
-no external data.
+no external data. Without the reference checkout, the same rows are read
+from their committed snapshot, tests/fixtures/pages.parquet (written from
+this module by tools/make_fixtures.py).
 """
 
 from __future__ import annotations
@@ -14,6 +16,9 @@ import os
 REFERENCE_ROOT = os.environ.get("PDF4PY_REFERENCE_ROOT", "/root/reference")
 PDF_DIR = os.path.join(REFERENCE_ROOT, "tests", "pdfs")
 ENCRYPTED_DIR = os.path.join(REFERENCE_ROOT, "tests", "encrypted_pdfs")
+FIXTURE_PAGES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(
+        __file__)))), "tests", "fixtures", "pages.parquet")
 
 EPOCH = datetime.datetime(2026, 1, 1, 0, 0, 0)
 
@@ -57,6 +62,11 @@ _ADVERSARIAL = [
 def corpus_rows():
     """Yield (url, warc_ts, html_payload, text, lang) rows, deterministic
     order and timestamps."""
+    if not os.path.isdir(PDF_DIR):
+        import pyarrow.parquet as pq
+        table = pq.read_table(FIXTURE_PAGES, columns=[
+            "url", "warc_ts", "html", "text", "lang"])
+        return list(zip(*(col.to_pylist() for col in table.columns)))
     rows = []
     for name in sorted(os.listdir(PDF_DIR)):
         with open(os.path.join(PDF_DIR, name), "rb") as fh:

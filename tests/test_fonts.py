@@ -263,16 +263,11 @@ def test_doc_xmp_absent_and_present():
     from pdf4py_spark.sources.synthpdf import identity_h_pdf
 
     assert doc_xmp(DocumentParser(identity_h_pdf())) == (0, "")
-    import os
+    from pdf4py_spark.sources.corpus import corpus_rows
 
-    import pytest as _pytest
-
-    from pdf4py_spark.sources.corpus import PDF_DIR
-    sample = os.path.join(PDF_DIR, "0003.pdf")
-    if not os.path.exists(sample):
-        _pytest.skip("reference corpus not available")
-    with open(sample, "rb") as fh:
-        n, digest = doc_xmp(DocumentParser(fh.read()))
+    sample = {u: p for u, _t, p, _x, _l in corpus_rows()}[
+        "crawl://pdfs/0003.pdf"]
+    n, digest = doc_xmp(DocumentParser(sample))
     assert n > 0 and len(digest) == 32
 
 

@@ -13,16 +13,11 @@ from pdf4py_spark.plans.pipeline import (
     extract_pages, extracted_view, lineage_view, metrics_rollup,
     metrics_view, run_resumable,
 )
-from pdf4py_spark.sources.corpus import REFERENCE_ROOT
 from pdf4py_spark.sources.pages import (
     corpus_pages_df, passwords_df, write_pages_parquet,
 )
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(os.path.join(REFERENCE_ROOT, "tests", "pdfs")),
-    reason="reference corpus not available")
 
 
 def oracle_df(spark):
@@ -106,6 +101,52 @@ def test_plan_hygiene(spark, tmp_path):
     assert scan_line, plan
     assert "text" not in scan_line[0] and "lang" not in scan_line[0]
 
+
+def test_kernel_task_drops_zip_importers(tmp_path):
+    """An extraction task deletes every zipimporter from
+    sys.path_importer_cache (so the next task's importlib.invalidate_caches()
+    in a reused worker does not re-read each archive); the row extracts as
+    before and modules in the zip still import."""
+    import datetime
+    import sys
+    import zipfile
+    import zipimport
+
+    import pandas as pd
+
+    from pdf4py_spark.kernel.extract import extract_document
+    from pdf4py_spark.plans.pipeline import _make_extract_batches
+
+    archive = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("_zip_probe_first.py", "X = 1\n")
+        zf.writestr("_zip_probe_second.py", "Y = 2\n")
+    sys.path.insert(0, archive)
+    try:
+        import _zip_probe_first  # noqa: F401
+        assert isinstance(sys.path_importer_cache[archive],
+                          zipimport.zipimporter)
+        html = (b"<html><body><nav>Home</nav><article><h2>Zip cache</h2>"
+                b"<p>One row through the kernel.</p></article></body></html>")
+        batch = pd.DataFrame({"url": ["crawl://html/zip-probe"],
+                              "warc_ts": [datetime.datetime(2026, 1, 1)],
+                              "html": [html]})
+        out = pd.concat(list(_make_extract_batches("raw")(iter([batch]))))
+        expected = extract_document(html, None, "raw")
+        assert len(out) == 1
+        row = out.iloc[0]
+        assert expected.status == "ok" and row["status"] == "ok"
+        assert row["extracted"] == expected.extracted
+        assert row["partition_id"] == -1
+        assert not any(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        import _zip_probe_second
+        assert _zip_probe_second.Y == 2
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        sys.modules.pop("_zip_probe_first", None)
+        sys.modules.pop("_zip_probe_second", None)
 
 def test_views_and_rollups(spark, extraction):
     ext = extracted_view(extraction)

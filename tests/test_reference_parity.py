@@ -1,7 +1,7 @@
 """Differential byte-identity tests: the engine kernel versus the committed
 oracle goldens (generated from the reference implementation by
-tools/make_oracle.py) and, when the reference checkout is present, a live
-in-process differential over the full corpus.
+tools/make_oracle.py), in process over the full corpus (read from the
+reference checkout, or from its committed snapshot without one).
 
 This realizes the north-rule invariant: byte-identical extracted text per
 url, plus census parity (n_objects, n_pages, version) and an aligned
@@ -12,18 +12,10 @@ import hashlib
 import json
 import os
 
-import pytest
-
 from pdf4py_spark.kernel.extract import extract_document
-from pdf4py_spark.sources.corpus import (
-    REFERENCE_ROOT, corpus_rows, password_for,
-)
+from pdf4py_spark.sources.corpus import corpus_rows, password_for
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
-HAVE_CORPUS = os.path.isdir(os.path.join(REFERENCE_ROOT, "tests", "pdfs"))
-
-pytestmark = pytest.mark.skipif(
-    not HAVE_CORPUS, reason="reference corpus not available")
 
 
 def _manifest():

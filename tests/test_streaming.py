@@ -3,15 +3,8 @@ under a file-source stream with an availableNow trigger, checkpointed."""
 
 import os
 
-import pytest
-
-from pdf4py_spark.sources.corpus import REFERENCE_ROOT
 from pdf4py_spark.sources.pages import corpus_pages_df
 from pdf4py_spark.streaming import run_stream_once
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(os.path.join(REFERENCE_ROOT, "tests", "pdfs")),
-    reason="reference corpus not available")
 
 
 def test_stream_drains_and_checkpoints(spark, tmp_path):

@@ -10,9 +10,14 @@ TJ array flattening, Tf font selection, q/Q save/restore."""
 import os
 import sys
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
-sys.path.insert(0, os.environ.get("PDF4PY_REFERENCE_ROOT", "/root/reference"))
+from pdf4py_spark.sources.corpus import REFERENCE_ROOT
+
+if not os.path.isdir(os.path.join(REFERENCE_ROOT, "pdf4py")):
+    pytest.skip("reference not available", allow_module_level=True)
+sys.path.insert(0, REFERENCE_ROOT)
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf4py_spark.kernel.fonts import build_font_decoder  # noqa: E402
