@@ -26,11 +26,8 @@ from __future__ import annotations
 
 import re
 
-from .lexer import ESCAPE_MAP, Tokenizer, _STR_SPECIAL_RE, _WS_BYTES
-from .model import (
-    DictMark, HexString, Keyword, LiteralString, Operator, Ref, Singleton,
-    Stream,
-)
+from .lexer import ESCAPE_MAP, _STR_SPECIAL_RE, _WS_BYTES
+from .model import HexString, LiteralString, Operator, Ref, Stream
 from .parser import DocumentParser, ObjectScanner
 
 _SHOW_OPS = ("Tj", "'", '"')
@@ -97,29 +94,22 @@ def text_from_content_bytes(content: bytes) -> bytes:
     """Concatenate string operands of text-showing operators in content
     order from one decoded content stream.
 
-    r6: two fast tiers above the parse-based exact interpreter.
-    Tier 1 (``_text_fast2``) drives one master regex per token — no
-    Tokenizer object, no token objects, no int()/float()/utf8-decode for
-    operands whose CLASS is all the interpreter needs — and consumes
-    dictionaries natively (transparent operands, parse()'s exact error
-    shapes). It bails on ANY construct or lexical irregularity it does
-    not replicate bit-for-bit: ``_FallBack2`` re-runs tier 2,
-    ``_FallBack`` (``N G obj``) goes straight to the exact interpreter.
-    Tier 2 (``_text_fast``) is the token-driven twin of the exact path
-    (no per-object ObjectScanner.parse frame); it still bails to exact
-    on every dict mark. Every bail re-runs a slower-but-pinned tier, so
-    the output is the parse-based result by construction on every bail;
-    the only correctness surface is the non-bail path, pinned by
-    whole-corpus doc-by-doc compares, >1M differential-fuzz trials, and
-    the frozen bench corpus checksum (OPTIMIZATION_r06.md)."""
+    Two tiers. The fast tier (``_text_fast``) drives one master regex per
+    token — no Tokenizer object, no token objects, no int()/float()/
+    utf8-decode for operands whose CLASS is all the interpreter needs —
+    and consumes dictionaries natively (transparent operands, parse()'s
+    exact error shapes). It raises ``_FallBack`` on ANY construct or
+    lexical irregularity it does not replicate bit-for-bit, and the
+    parse-based ``_text_exact`` re-runs the stream. Every bail therefore
+    yields the exact result by construction, including the exception a
+    lexical error on the first token raises (it quarantines the
+    document); the only correctness surface is the non-bail path, pinned
+    against ``_text_exact`` by tests/test_text_interpreter_fast.py
+    (edge cases, differential fuzz, every content stream of the
+    committed corpus) and by the golden hashes and bench checksum."""
     data = excise_inline_images(content)
     try:
-        return _text_fast2(data)
-    except _FallBack2:
-        try:
-            return _text_fast(data)
-        except _FallBack:
-            return _text_exact(data)
+        return _text_fast(data)
     except _FallBack:
         return _text_exact(data)
 
@@ -165,8 +155,8 @@ def _text_exact(data: bytes) -> bytes:
 
 
 class _FallBack(Exception):
-    """Raised by _text_fast on any construct whose consumption it does
-    not replicate bit-for-bit; the caller re-runs the exact path."""
+    """Raised by _text_fast on any construct or lexical irregularity it
+    does not replicate bit-for-bit; the caller re-runs _text_exact."""
 
 
 #: content nesting bound — must track ObjectScanner.MAX_NESTING so the
@@ -174,181 +164,8 @@ class _FallBack(Exception):
 _MAX_NESTING = ObjectScanner.MAX_NESTING
 
 
-def _text_fast(data: bytes) -> bytes:
-    """Token-driven twin of _text_exact for flat content streams.
-
-    State replication notes (all against ObjectScanner.parse semantics,
-    content_mode=True, obj_id=None):
-    * the operand stack only matters through 'the most recent
-      Literal/HexString' (show ops) and 'the most recent array' (TJ),
-      both cleared at every operator — tracked as two slots;
-    * the int reference-lookahead (N N R -> Ref, with the third token
-      effectively pushed back when the pattern fails) is replicated with
-      a one-slot hold; ``N G obj`` bails (IndirectObject);
-    * dict marks bail (<< can parse successfully and continue);
-    * Keyword / StreamMark / bare '>>' / stray ] { } raise
-      StructureError in the exact path, which ends extraction — here they
-      simply end the loop at the same point;
-    * StopIteration / TokenError anywhere end extraction with the pieces
-      gathered so far — identical to the exact path's except/break;
-    * an incomplete array contributes nothing (the exact path never
-      returns it into pending).
-    """
-    tok = Tokenizer(data)
-    pieces = []
-    last_str = None   # decoded bytes of the most recent string operand
-    last_arr = None   # decoded pieces of the most recent array operand
-    held = None       # one-slot pushback for the int lookahead
-    _lit = LiteralString
-    _hex = HexString
-    _op = Operator
-    _single = Singleton
-
-    def _nxt():
-        nonlocal held
-        if held is not None:
-            v = held
-            held = None
-            return v
-        return tok.next_token()
-
-    def _consume_int_run(first):
-        """Consume parse()'s int lookahead starting from int ``first``
-        (already consumed); leaves the follow-on token in ``held``.
-        Mirrors: N N R -> Ref, N G obj -> bail, otherwise each int is a
-        plain operand and the lookahead token is pushed back."""
-        nonlocal held
-        cur = first
-        while cur.__class__ is int:
-            second = _nxt()
-            if isinstance(second, int):
-                third = tok.next_token()
-                if third.__class__ is _op and third.value == "R":
-                    return  # Ref consumed: held stays empty
-                if isinstance(third, Keyword):
-                    if third.value == b"obj":
-                        raise _FallBack()
-                    raise StopIteration  # StructureError in exact path
-                held = third
-                cur = second
-            else:
-                held = second
-                return
-
-    def _consume_array(depth: int):
-        """Consume one array (opening '[' already consumed), returning
-        its string pieces in element order. Mirrors parse()'s array
-        branch; raises _FallBack/TokenError/StopIteration like parse.
-
-        Depth alignment: parse() raises when an ELEMENT parse starts
-        with MAX_NESTING frames active — an empty array at the limit
-        still closes — so the breach test runs per non-']' element, not
-        at array entry."""
-        out = []
-        while True:
-            cur = _nxt()
-            t = cur.__class__
-            if depth >= _MAX_NESTING and not (
-                    t is _single and cur.value == 0x5D):
-                raise StopIteration  # exact path: StructureError -> end
-            if t is int:
-                _consume_int_run(cur)
-                continue
-            if t is _lit:
-                out.append(cur.value)
-                continue
-            if t is _hex:
-                out.append(_unhex(cur.value))
-                continue
-            if t is float or t is str or t is bool or cur is None \
-                    or t is _op:
-                continue  # non-string element (incl. bare operators)
-            if t is _single:
-                v = cur.value
-                if v == 0x5D:  # ] closes this array
-                    return out
-                if v == 0x5B:  # nested array: consume, contribute nothing
-                    _consume_array(depth + 1)
-                    continue
-                raise StopIteration  # { } -> StructureError in exact path
-            if t is DictMark and cur.value == b"<<":
-                raise _FallBack()
-            raise StopIteration  # Keyword / StreamMark / bare >> / other
-
-    # first token: StopIteration means empty content (exact path: scanner
-    # construction marks done -> b""), but a Token/KernelError must
-    # PROPAGATE like ObjectScanner.__init__ does (the whole document
-    # quarantines) — it must not be swallowed into an empty result
-    try:
-        cur = tok.next_token()
-    except StopIteration:
-        return b""
-    try:
-        while True:
-            t = cur.__class__
-            if t is int:
-                _consume_int_run(cur)
-                cur = _nxt()
-                continue
-            if t is _op:
-                # parse() PRE-FETCHES the next token before returning an
-                # object, so an operator's effect lands only if the
-                # following token scans cleanly (EOF counts as clean, a
-                # TokenError does not) — fetch first, then apply
-                name = cur.value
-                try:
-                    nxt = _nxt()
-                except StopIteration:
-                    nxt = None
-                    ended = True
-                else:
-                    ended = False
-                if name in _SHOW_OPS:
-                    if last_str is not None:
-                        pieces.append(last_str)
-                elif name == "TJ":
-                    if last_arr is not None:
-                        pieces.extend(last_arr)
-                last_str = None
-                last_arr = None
-                if ended:
-                    break
-                cur = nxt
-                continue
-            if t is _lit:
-                last_str = cur.value
-                cur = tok.next_token()
-                continue
-            if t is _hex:
-                last_str = _unhex(cur.value)
-                cur = tok.next_token()
-                continue
-            if t is float or t is str or t is bool or cur is None:
-                cur = _nxt()
-                continue
-            if t is _single:
-                if cur.value == 0x5B:  # [
-                    last_arr = _consume_array(1)
-                    cur = _nxt()
-                    continue
-                break  # ] { } at top level -> StructureError in exact path
-            if t is DictMark and cur.value == b"<<":
-                raise _FallBack()
-            break  # Keyword / StreamMark / bare >> / anything else
-    except _FallBack:
-        raise
-    except Exception:
-        pass  # end of input or scan error: keep pieces gathered so far
-    return b"".join(pieces)
-
-
-class _FallBack2(Exception):
-    """Raised by _text_fast2 on any construct or lexical irregularity it
-    does not replicate bit-for-bit; the caller re-runs _text_fast."""
-
-
 class _EndScan(Exception):
-    """_text_fast2-internal: end extraction, keep pieces (the exact
+    """_text_fast-internal: end extraction, keep pieces (the exact
     path's StopIteration-equivalent)."""
 
 
@@ -362,7 +179,7 @@ class _EndScan(Exception):
 # _scan_number), and value literals before struct keywords in exactly
 # _WORD_CANDIDATES' per-first-byte probe order (prefix match, no word
 # boundary — 'truex' lexes as 'true' + 'x' in both).
-_TOK2 = re.compile(
+_TOK = re.compile(
     rb"(?>[\x00\t\n\x0c\r ]*)"
     rb"(?:"
     rb"(?P<s>\((?P<sv>[^()\\]*)\))"                     # escape-free string
@@ -411,14 +228,14 @@ def _scan_hard_string(buf: bytes, i: int, n: int):
     """Literal string containing ( ) or backslash: the unescape loop of
     lexer._scan_literal_string, from just after the opening '('.
     Returns (value, pos_after); EOF inside the string and octal escapes
-    above 255 bail (the old path raises StopIteration / ValueError there
-    and the re-run reproduces those outcomes exactly)."""
+    above 255 bail (the byte-level lexer raises StopIteration /
+    ValueError there and the exact re-run reproduces those outcomes)."""
     depth = 1
     out = bytearray()
     while True:
         m = _STR_SPECIAL_RE.search(buf, i)
         if m is None:
-            raise _FallBack2
+            raise _FallBack
         j = m.start()
         out += buf[i:j]
         c = buf[j]
@@ -435,7 +252,7 @@ def _scan_hard_string(buf: bytes, i: int, n: int):
         else:  # backslash
             i = j + 1
             if i >= n:
-                raise _FallBack2
+                raise _FallBack
             d = buf[i]
             if d in _DIGIT_BYTES:
                 val = 0
@@ -445,25 +262,34 @@ def _scan_hard_string(buf: bytes, i: int, n: int):
                     i += 1
                     k += 1
                 if val > 255:
-                    raise _FallBack2  # ValueError in the byte-level lexer
+                    raise _FallBack  # ValueError in the byte-level lexer
                 out.append(val)
                 continue
             out.append(ESCAPE_MAP.get(d, d))
             i += 1
 
 
-def _text_fast2(data: bytes) -> bytes:
-    """Regex-match-loop twin of _text_fast (see text_from_content_bytes).
+def _text_fast(data: bytes) -> bytes:
+    """Regex-match-loop twin of _text_exact (see text_from_content_bytes).
 
-    Replicates _text_fast's state machine token-for-token — the two-slot
-    operand model, the int reference-lookahead (``N N R``; bool counts as
-    a generation number via isinstance, so ``N true R`` is a Ref in both),
-    the one-slot hold (a held ``null`` is dropped there too — a no-op
-    either way since null operands never contribute), parse()'s PRE-FETCH
-    contract (an operator's effect lands only when the following token
-    scans cleanly; EOF counts, a lexical error does not — errors bail and
-    the re-run reproduces the error semantics), and the per-element
-    nesting breach at MAX_NESTING."""
+    Replicates ObjectScanner.parse() (content_mode=True) as _text_exact
+    drives it, token for token:
+    * the operand stack only matters through 'the most recent
+      Literal/HexString' (show ops) and 'the most recent array' (TJ),
+      both cleared at every operator — tracked as two slots;
+    * the int reference-lookahead (``N N R`` -> Ref; bool counts as a
+      generation number via isinstance, so ``N true R`` is a Ref too)
+      with a one-slot hold for the token parse() pushes back; ``N G obj``
+      (IndirectObject) bails;
+    * dictionaries are consumed natively as transparent operands, with
+      parse()'s dict error shapes;
+    * parse()'s PRE-FETCH contract: an operator's effect lands only when
+      the following token scans cleanly (EOF counts; a lexical error does
+      not — errors bail and the exact re-run reproduces their semantics);
+    * a structure error (keyword, stray ``]`` / ``>>``, nesting breach
+      per element at MAX_NESTING) ends extraction with the pieces so far,
+      like _text_exact's except/break; an incomplete array contributes
+      nothing."""
     buf = data
     n = len(buf)
     pos = 0
@@ -471,7 +297,7 @@ def _text_fast2(data: bytes) -> bytes:
     last_str = None   # most recent string operand's decoded bytes
     last_arr = None   # most recent array operand's string pieces
     held = None       # one-slot pushback for the int lookahead
-    match = _TOK2.match
+    match = _TOK.match
 
     def scan():
         nonlocal pos
@@ -487,13 +313,13 @@ def _text_fast2(data: bytes) -> bytes:
             if g == "op":
                 v = m.group("op")
                 if 0x23 in v:    # '#xx' escapes decode in the byte lexer
-                    raise _FallBack2
+                    raise _FallBack
                 return (_K_OP, v)
             if g == "s":
                 return (_K_STR, m.group("sv"))
             if g == "n":
                 if 0x23 in m.group("n"):
-                    raise _FallBack2
+                    raise _FallBack
                 return _T_NAME
             if g == "f":
                 return _T_FLOAT
@@ -514,11 +340,11 @@ def _text_fast2(data: bytes) -> bytes:
                 if k is None:
                     if v == b"<<":
                         return _T_DO  # consumed natively (consume_dict)
-                    raise _FallBack2  # 'stream' (stream-mark EOL rules)
+                    raise _FallBack  # 'stream' (stream-mark EOL rules)
                 return k
             if g == "cmt":
                 continue
-            raise _FallBack2  # <nb>, <bad>: lexical error in the old path
+            raise _FallBack  # <nb>, <bad>: lexical error in the byte lexer
 
     def nxt():
         nonlocal held
@@ -538,7 +364,7 @@ def _text_fast2(data: bytes) -> bytes:
                     return      # Ref consumed: held stays empty
                 if tk == _K_KW:
                     if tv == b"obj":
-                        raise _FallBack()  # N G obj: same as _text_fast
+                        raise _FallBack  # N G obj: IndirectObject
                     raise _EndScan  # StructureError in the exact path
                 held = (tk, tv)
                 curk = sk
@@ -586,7 +412,7 @@ def _text_fast2(data: bytes) -> bytes:
             if tk == _K_OP and tv == b"R":
                 return              # Ref value
             if tk == _K_KW and tv == b"obj":
-                raise _FallBack()   # IndirectObject: exact path handles
+                raise _FallBack     # IndirectObject: exact path handles
             # parse: push_back(second), return first -> the next key is
             # the int/bool second -> "key must be a name" -> end
             raise _EndScan

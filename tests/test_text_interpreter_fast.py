@@ -1,36 +1,67 @@
-"""Round-6 optimization pin: the token-driven fast content interpreter
-(textextract._text_fast) must be byte-identical to the parse-based exact
-interpreter (_text_exact) on every stream the fast path accepts, and bail
-(_FallBack) on every construct it does not replicate — never silently
-diverge. A 150k-trial adversarial fuzz of the same generator ran clean at
-change time (OPTIMIZATION_r06.md); this keeps a deterministic 3k-trial
-slice in CI plus the hand-picked edge cases that caught real divergences
-during development."""
+"""Pin the raw-text fast interpreter (textextract._text_fast) against the
+parse-based exact interpreter (_text_exact).
+
+text_from_content_bytes runs the fast tier and, on ``_FallBack``, re-runs
+_text_exact; so a bail is correct by construction and the only
+correctness surface is the non-bail path. These tests check that:
+
+* on every stream the fast tier accepts it returns exactly what
+  _text_exact returns (or raises the same exception) — two
+  hand-picked edge-case lists and two deterministic fuzz generators;
+* the constructs it does not replicate bail instead of diverging, and a
+  bail that ends in a lexical error raises _text_exact's exception (type
+  and message) from the public entry point, since that exception is what
+  quarantines the document;
+* it accepts every content stream of the committed corpus, so an edit
+  that starts bailing on real content fails here instead of only
+  running slower.
+
+Longer soaks of both generators run off-CI by changing the seed and the
+trial count."""
 
 import random
 
+import pyarrow.parquet as pq
 import pytest
 
 import pdf4py_spark.kernel.textextract as TE
+from pdf4py_spark.kernel.extract import extract_document
+from pdf4py_spark.sources.corpus import FIXTURE_PAGES, PASSWORDS
 
 
-def _both(data: bytes):
-    """(fast_result, exact_result) as ('ok', bytes) / ('exc', name);
-    a _FallBack from the fast path re-runs exact by construction, so it
-    counts as agreement."""
-    def run(fn):
-        try:
-            return ("ok", fn(data))
-        except Exception as exc:  # noqa: BLE001 - comparing outcomes
-            return ("exc", type(exc).__name__)
-
+def _outcome(fn, data: bytes):
+    """('ok', bytes) or (exception type name, message)."""
     try:
-        fast = ("ok", TE._text_fast(data))
+        return ("ok", fn(data))
+    except Exception as exc:  # noqa: BLE001 - comparing outcomes
+        return (type(exc).__name__, str(exc))
+
+
+def _fast_outcome(data: bytes):
+    """_outcome of the fast tier, or None when it bails (production
+    re-runs _text_exact then)."""
+    try:
+        return ("ok", TE._text_fast(data))
     except TE._FallBack:
-        return None, None  # exact path used either way
-    except Exception as exc:  # noqa: BLE001
-        fast = ("exc", type(exc).__name__)
-    return fast, run(TE._text_exact)
+        return None
+    except Exception as exc:  # noqa: BLE001 - comparing outcomes
+        return (type(exc).__name__, str(exc))
+
+
+def _mismatches(inputs):
+    """(data, fast, exact) for every accepted input whose outcome differs
+    from _text_exact's, and the number of accepted inputs."""
+    out = []
+    accepted = 0
+    for data in inputs:
+        got = _fast_outcome(data)
+        if got is None:
+            continue
+        accepted += 1
+        want = _outcome(TE._text_exact, data)
+        if got != want:
+            out.append((data, got, want))
+    return out, accepted
 
 
 EDGE_CASES = [
@@ -62,13 +93,55 @@ EDGE_CASES = [
     b"(s) [ Tj (t) ] TJ",
 ]
 
+LEXICAL_EDGE_CASES = [
+    # sign/dot lead bytes must route to the number-error bail, never lex
+    # as an operator word (the <nb> group)
+    b"(a) Tj + (b) Tj",
+    b"(a) Tj . (b) Tj",
+    b"(a) Tj -. (b) Tj",
+    b"(a) Tj 5.. (b) Tj",
+    # prefix keyword matching with no word boundary
+    b"(a) truex Tj",
+    # comment filler mid-stream and (bail) at EOF
+    b"(a) %c\n Tj",
+    b"(a) Tj %trailing",
+    # deep-nesting breach lands on the same element
+    b"[" * 199 + b"(deep)" + b"]" * 199 + b" TJ",
+    b"[" * 201 + b"(deep)" + b"]" * 201 + b" TJ",
+    # hex with odd nibble + embedded whitespace; escape-free vs escaped
+    b"<48 6\n5 6c6C 6> Tj",
+    b"(no escapes) Tj (with \\(escapes\\)) Tj",
+    # held-token paths through the int lookahead
+    b"1 null (x) Tj",
+    b"1 2 3 4 (x) Tj",
+    b"(a) 5 true 7 Tj",
+    # native dict consumption: dicts are transparent operands, their
+    # string values never show, and parse()'s dict error shapes end
+    # extraction at the same point
+    b"(x) << /K (inner) >> Tj",
+    b"<< /A 1 /B 2.5 /C /N /D true /F (s) /G <4142> /H [1 (e)] >> (a) Tj",
+    b"<< /A << /B << /C 1 >> >> >> (a) Tj",
+    b"[ (a) << /X (hidden) >> (b) ] TJ",
+    b"<< /A 1 2 >> (a) Tj",          # int-pair value -> int key -> end
+    b"<< /A 1 0 R /B 2 >> (a) Tj",   # Ref value
+    b"<< (key) (val) >> (a) Tj",     # non-name key -> end
+    b"<< /A >> (a) Tj",              # '>>' in value position -> end
+    b"<< /A",                         # EOF after a key
+    b"<< /A 5 true R >> (a) Tj",     # bool generation number
+    b"1 2 << /K 3 >> (x) Tj",        # dict via the int-run hold
+    b"[" * 199 + b"<< /K (v) >>" + b"]" * 199 + b" TJ",
+    b"[" * 200 + b"<< /K (v) >>" + b"]" * 200 + b" TJ",
+]
+
 
 def test_fast_interpreter_edge_cases_match_exact():
-    for data in EDGE_CASES:
-        fast, exact = _both(data)
-        if fast is None:
-            continue  # bailed: exact path used in production
-        assert fast == exact, data
+    mismatches, _ = _mismatches(EDGE_CASES)
+    assert not mismatches, mismatches
+
+
+def test_fast_interpreter_lexical_edge_cases_match_exact():
+    mismatches, _ = _mismatches(LEXICAL_EDGE_CASES)
+    assert not mismatches, mismatches
 
 
 def test_fast_interpreter_fuzz_matches_exact():
@@ -105,107 +178,14 @@ def test_fast_interpreter_fuzz_matches_exact():
             return b"<< /K " + tok(depth + 1) + b" >>"
         return rng.choice([b"{", b"}", b"]", b">>", b"\xff", b"%c\n"])
 
-    mismatches = []
-    for _ in range(3000):
-        data = b" ".join(tok() for _ in range(rng.randint(1, 20)))
-        fast, exact = _both(data)
-        if fast is None:
-            continue
-        if fast != exact:
-            mismatches.append((data, fast, exact))
+    mismatches, accepted = _mismatches(
+        b" ".join(tok() for _ in range(rng.randint(1, 20)))
+        for _ in range(3000))
     assert not mismatches, mismatches[:3]
+    assert accepted >= 1000, accepted  # the non-bail path is exercised
 
 
-def test_fallback_constructs_bail_not_diverge():
-    for data in (b"<< /A 1 >> (x) Tj", b"1 0 obj (x) Tj endobj",
-                 b"[ << /A 1 >> ] TJ"):
-        with pytest.raises(TE._FallBack):
-            TE._text_fast(data)
-        # and the public entry point still yields the exact result
-        assert (TE.text_from_content_bytes(data)
-                == TE._text_exact(TE.excise_inline_images(data)))
-
-
-# ---------------------------------------------------------------------------
-# tier-1 regex interpreter (_text_fast2): must be byte-identical to the
-# production chain on every stream it accepts and bail (either fallback
-# exception) on the rest — the bail path re-runs a pinned tier, so only
-# the non-bail path can diverge. 500k trials of the two generators below
-# ran clean at change time (OPTIMIZATION_r06.md).
-# ---------------------------------------------------------------------------
-
-def _old_chain(data: bytes):
-    try:
-        return ("ok", TE._text_fast(data))
-    except TE._FallBack:
-        try:
-            return ("ok", TE._text_exact(data))
-        except Exception as exc:  # noqa: BLE001
-            return ("exc", type(exc).__name__)
-    except Exception as exc:  # noqa: BLE001
-        return ("exc", type(exc).__name__)
-
-
-def _fast2_outcome(data: bytes):
-    try:
-        return ("ok", TE._text_fast2(data))
-    except (TE._FallBack2, TE._FallBack):
-        return None  # bail: a pinned tier re-runs in production
-    except Exception as exc:  # noqa: BLE001
-        return ("exc", type(exc).__name__)
-
-
-FAST2_EDGE_CASES = EDGE_CASES + [
-    # sign/dot lead bytes must route to the number-error bail, never lex
-    # as an operator word (the <nb> group)
-    b"(a) Tj + (b) Tj",
-    b"(a) Tj . (b) Tj",
-    b"(a) Tj -. (b) Tj",
-    b"(a) Tj 5.. (b) Tj",
-    # prefix keyword matching with no word boundary
-    b"(a) truex Tj",
-    # comment filler mid-stream and (bail) at EOF
-    b"(a) %c\n Tj",
-    b"(a) Tj %trailing",
-    # deep-nesting breach lands on the same element
-    b"[" * 199 + b"(deep)" + b"]" * 199 + b" TJ",
-    b"[" * 201 + b"(deep)" + b"]" * 201 + b" TJ",
-    # hex with odd nibble + embedded whitespace; escape-free vs escaped
-    b"<48 6\n5 6c6C 6> Tj",
-    b"(no escapes) Tj (with \\(escapes\\)) Tj",
-    # held-token paths through the int lookahead
-    b"1 null (x) Tj",
-    b"1 2 3 4 (x) Tj",
-    b"(a) 5 true 7 Tj",
-    # native dict consumption (tier 1 handles what tier 2 bails on, so
-    # these pin fast2 against the EXACT path): dicts are transparent
-    # operands, their string values never show, and parse()'s dict error
-    # shapes end extraction at the same point
-    b"(x) << /K (inner) >> Tj",
-    b"<< /A 1 /B 2.5 /C /N /D true /F (s) /G <4142> /H [1 (e)] >> (a) Tj",
-    b"<< /A << /B << /C 1 >> >> >> (a) Tj",
-    b"[ (a) << /X (hidden) >> (b) ] TJ",
-    b"<< /A 1 2 >> (a) Tj",          # int-pair value -> int key -> end
-    b"<< /A 1 0 R /B 2 >> (a) Tj",   # Ref value
-    b"<< (key) (val) >> (a) Tj",     # non-name key -> end
-    b"<< /A >> (a) Tj",              # '>>' in value position -> end
-    b"<< /A",                         # EOF after a key
-    b"<< /A 5 true R >> (a) Tj",     # bool generation number
-    b"1 2 << /K 3 >> (x) Tj",        # dict via the int-run hold
-    b"[" * 199 + b"<< /K (v) >>" + b"]" * 199 + b" TJ",
-    b"[" * 200 + b"<< /K (v) >>" + b"]" * 200 + b" TJ",
-]
-
-
-def test_fast2_edge_cases_match_production():
-    for data in FAST2_EDGE_CASES:
-        got = _fast2_outcome(data)
-        if got is None:
-            continue  # bailed: pinned tier used in production
-        assert got == _old_chain(data), data
-
-
-def test_fast2_fuzz_matches_production():
+def test_fast_interpreter_lexical_fuzz_matches_exact():
     rng = random.Random(31337)
     ops = [b"Tj", b"TJ", b"'", b'"', b"BT", b"ET", b"Td", b"R", b"re",
            b"gs", b"Do", b"q", b"Q", b"T#6a", b"truex"]
@@ -242,15 +222,61 @@ def test_fast2_fuzz_matches_production():
         return rng.choice([b"{", b"}", b"]", b">>", b"\xff", b"%c\n",
                            b"%c", b")", b"\x7f", b"stream\r\nX"])
 
-    mismatches = []
-    for _ in range(3000):
+    def stream():
         data = rng.choice([b" ", b"", b"\n"]).join(
             tok() for _ in range(rng.randint(1, 22)))
-        data += rng.choice([b"", b" ", b"\n\n", b"\t"])
-        got = _fast2_outcome(data)
-        if got is None:
-            continue
-        want = _old_chain(data)
-        if got != want:
-            mismatches.append((data, got, want))
+        return data + rng.choice([b"", b" ", b"\n\n", b"\t"])
+
+    mismatches, accepted = _mismatches(stream() for _ in range(3000))
     assert not mismatches, mismatches[:3]
+    assert accepted >= 500, accepted  # the non-bail path is exercised
+
+
+BAIL_CASES = [
+    # constructs the fast tier does not replicate
+    b"1 0 obj (x) Tj endobj",
+    b"(a) /T#6a Tj",
+    b"(a) Tj stream\n (b) Tj",
+]
+
+QUARANTINE_CASES = [
+    # a lexical error on the first token propagates out of _text_exact
+    # (TokenError x3, ValueError) and quarantines the document, so the
+    # public entry point must raise the same type and message
+    b"\xff (a) Tj",
+    b") (a) Tj",
+    b"+ (a) Tj",
+    b"(\\777) Tj",
+]
+
+
+def test_fallback_constructs_bail_not_diverge():
+    for data in BAIL_CASES + QUARANTINE_CASES:
+        with pytest.raises(TE._FallBack):
+            TE._text_fast(data)
+        # and the public entry point yields the exact outcome
+        assert (_outcome(TE.text_from_content_bytes, data)
+                == _outcome(TE._text_exact, TE.excise_inline_images(data))
+                ), data
+    for data in QUARANTINE_CASES:
+        assert _outcome(TE._text_exact, data)[0] != "ok", data
+
+
+def test_fast_tier_accepts_every_corpus_stream(monkeypatch):
+    # every content stream the raw extraction of the committed corpus
+    # interprets must take the fast tier (no _FallBack) and match exact
+    streams = []
+    real = TE.text_from_content_bytes
+
+    def spy(content):
+        streams.append(TE.excise_inline_images(content))
+        return real(content)
+
+    monkeypatch.setattr(TE, "text_from_content_bytes", spy)
+    table = pq.read_table(FIXTURE_PAGES, columns=["url", "html"])
+    for url, payload in zip(*(col.to_pylist() for col in table.columns)):
+        extract_document(payload, PASSWORDS.get(url))
+
+    assert len(streams) == 911
+    for data in streams:
+        assert TE._text_fast(data) == TE._text_exact(data)
