@@ -15,7 +15,8 @@ the cap so the overflow cannot regress silently.
 
 Env / flags:
     SPARK_GRAFT_SF_DIR   input tables dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+    SPARK_GRAFT_CPUS     local[] parallelism (default: the CPUs this
+                         process may run on)
     --suite extract      only the extraction throughput job (used by
                          tools/bench_scaling.py for the N vs 4N runs)
     --copies K           corpus amplification factor (default 100)
@@ -40,22 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REFERENCE_BASELINE_DOCS_PER_SEC = 0.98  # single-core pdf4py full-graph parse
                                         # (SURVEY.md §6, measured)
 ROUND = "7"  # default suffix for BENCH/QUERIES_r{N}.json
-
-
-def build_session(cpus: int):
-    from pyspark.sql import SparkSession
-    return (SparkSession.builder.master("local[%d]" % cpus)
-            .appName("pdf4py-spark-bench")
-            .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-            .config("spark.buffer.size", "1048576")
-            .config("spark.python.unix.domain.socket.enabled", "true")
-            .config("spark.local.dir", "/dev/shm/spark-local")
-            .config("spark.driver.memory", "16g")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
 
 
 def _corpus_fingerprint() -> str:
@@ -213,7 +198,8 @@ BENCH_QUERIES = (
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get(
+                        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
@@ -229,7 +215,9 @@ def main():
     if args.bind_cores and hasattr(os, "sched_setaffinity"):
         os.sched_setaffinity(0, set(range(args.cpus)))
 
-    spark = build_session(args.cpus)
+    from pdf4py_spark.session import build_session
+    spark = build_session("pdf4py-spark-bench", "local[%d]" % args.cpus,
+                          "/dev/shm/spark-local", "16g")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = {

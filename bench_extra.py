@@ -23,27 +23,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_session(cpus: int):
-    # mirror bench.py exactly so numbers are comparable to the frozen bench
-    from pyspark.sql import SparkSession
-    return (SparkSession.builder.master("local[%d]" % cpus)
-            .appName("pdf4py-spark-bench-extra")
-            .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-            .config("spark.buffer.size", "1048576")
-            .config("spark.python.unix.domain.socket.enabled", "true")
-            .config("spark.local.dir", "/dev/shm/spark-local")
-            .config("spark.driver.memory", "16g")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get(
+                        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf1.0"))
@@ -58,7 +42,9 @@ def main():
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    spark = build_session(args.cpus)
+    from pdf4py_spark.session import build_session
+    spark = build_session("pdf4py-spark-bench-extra", "local[%d]" % args.cpus,
+                          "/dev/shm/spark-local", "16g")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod

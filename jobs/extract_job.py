@@ -3,10 +3,7 @@
 Multi-executor usage (the 10^12-doc shape):
 
     zip -r engine.zip pdf4py_spark
-    spark-submit --py-files engine.zip \\
-        --conf spark.sql.adaptive.enabled=true \\
-        --conf spark.sql.execution.arrow.maxRecordsPerBatch=64 \\
-        jobs/extract_job.py \\
+    spark-submit --py-files engine.zip jobs/extract_job.py \\
         --source  s3://bucket/pages_table \\
         --output  s3://bucket/extracted \\
         --shards 4096 --partitions 32768
@@ -52,13 +49,10 @@ def main():
                          "Differences)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pdf4py_spark.plans.pipeline import run_resumable
+    from pdf4py_spark.session import build_session
 
-    spark = (SparkSession.builder.appName("pdf4py-spark-extract")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+    spark = build_session("pdf4py-spark-extract")
     passwords = (spark.read.parquet(args.passwords)
                  if args.passwords else None)
     outcome = run_resumable(

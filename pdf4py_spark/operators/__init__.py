@@ -28,34 +28,7 @@ from collections import namedtuple
 QuerySpec = namedtuple("QuerySpec", ["fn", "sql"])
 
 
-#: sessions already engine-tuned (keyed by applicationId so a new session
-#: in the same process is re-tuned)
-_TUNED = set()
-
-
-def ensure_engine_tuning(spark):
-    """Align Spark's whole-stage-codegen bailout with HotSpot's JIT limit
-    (r6, measured): HotSpot never JIT-compiles a method over 8000 bytecode
-    bytes (-XX:DontCompileHugeMethods, default on), so a whole-stage
-    method between 8 KB and Spark's default 64 KB bailout runs in the
-    BYTECODE INTERPRETER — silently, at interpreted-expression speed.
-    Lowering spark.sql.codegen.hugeMethodLimit to 8000 makes such stages
-    fall back to per-operator execution whose split-method codegen
-    (UnsafeProjection et al.) stays under the JIT limit. Measured on the
-    unrolled 64-term cosine pair stage at sf1.0: 18.4 s -> 3.6 s
-    (whole suite effect A/B'd in OPTIMIZATION_r06.md). This is a
-    JVM-truth setting, not a local[32] tuning: the 8000-byte JIT limit is
-    identical on any cluster JVM. Runtime-settable (SQLConf), so it
-    composes with the frozen bench session; stages whose methods are
-    already under 8 KB are untouched."""
-    key = spark.sparkContext.applicationId
-    if key not in _TUNED:
-        spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
-        _TUNED.add(key)
-
-
 def table(spark, sf_dir: str, name: str):
-    ensure_engine_tuning(spark)
     return spark.read.parquet("%s/%s.parquet" % (sf_dir, name))
 
 
@@ -72,7 +45,10 @@ def widen_narrow_scan(df, min_parts: int = None):
     no shuffle is added — this is explicitly not a blanket
     repartition-for-parallelism (guide §2.4); the shuffled bytes are the
     pre-explode rows, the narrowest point of these pipelines. Width is
-    derived from the session's core count, never hard-coded."""
+    derived from the session's core count, never hard-coded. Light
+    pipelines (lang_id, bm25_search, quality_repetition,
+    dedup_paragraph) do not call it: their per-row work costs less than
+    the round-robin shuffle that would spread it."""
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism * 2
     if df.rdd.getNumPartitions() >= target:

@@ -39,10 +39,7 @@ def quality_repetition(spark, sf_dir):
     map-side combinable, the scalable shape for mode-of-many. Ratios
     divide small ints by doc length: single IEEE divisions of exact
     operands, identical in both engines."""
-    from . import widen_narrow_scan
-
-    docs = widen_narrow_scan(
-        table(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.withColumn("toks", F.split("text", " "))
 
     base = toks.select(
@@ -134,10 +131,9 @@ def dedup_paragraph(spark, sf_dir):
     hash -> per-doc rollup: every shuffle key is 8 bytes, and the unit
     relation is persisted because it feeds both the corpus-wide count
     and the per-doc join."""
-    from . import persist_tracked, widen_narrow_scan
+    from . import persist_tracked
 
-    docs = widen_narrow_scan(
-        table(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     units = (docs
              .select("doc_id", F.posexplode(
                  F.split("text", r"\. ")).alias("pos", "u"))

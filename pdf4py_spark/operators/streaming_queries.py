@@ -56,8 +56,6 @@ def _stream_base(spark, query_name):
     invocation of the same query in the same session is invalidated
     when the next one starts; every consumer here collects before
     re-invoking."""
-    from . import ensure_engine_tuning
-    ensure_engine_tuning(spark)
     base = os.path.join(STREAM_TMP, spark.sparkContext.applicationId,
                         query_name)
     shutil.rmtree(base, ignore_errors=True)

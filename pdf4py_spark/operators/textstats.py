@@ -59,13 +59,11 @@ FROM feats
 def lang_id(spark, sf_dir):
     """Stopword-vote language identification: distinct tokens join a tiny
     broadcast stopword dimension; argmax hits with deterministic ties."""
-    from . import widen_narrow_scan
-
     docs = table(spark, sf_dir, "documents")
     stop_rows = [(lang, w) for lang, ws in sorted(STOPWORDS.items())
                  for w in ws]
     stop = spark.createDataFrame(stop_rows, "cand_lang string, w string")
-    toks = (widen_narrow_scan(docs.select("doc_id", "lang", "text"))
+    toks = (docs.select("doc_id", "lang", "text")
             .withColumn("toks", F.array_distinct(F.split("text", " ")))
             .select("doc_id", "lang", F.explode("toks").alias("w")))
     hits = (toks.join(F.broadcast(stop), "w")
@@ -227,10 +225,7 @@ def bm25_search(spark, sf_dir, terms=BM25_TERMS):
     broadcast back (avgdl over the FULL corpus, computed before the
     pre-filter). Scores rounded to 4 decimals so last-ulp libm drift
     can't flip the cross-engine hash."""
-    from . import widen_narrow_scan
-
-    docs = widen_narrow_scan(table(spark, sf_dir, "documents")
-                             .select("doc_id", "text"))
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     with_len = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("double").alias("dl"),
         F.split("text", " ").alias("toks"))

@@ -5,24 +5,12 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from pdf4py_spark.session import build_session
 
-    session = (
-        SparkSession.builder.master(os.environ.get("SPARK_TEST_MASTER",
-                                                   "local[4]"))
-        .appName("pdf4py-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-        .config("spark.buffer.size", "1048576")
-        .config("spark.python.unix.domain.socket.enabled", "true")
-        .config("spark.local.dir", "/dev/shm/spark-local")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    session = build_session(
+        "pdf4py-spark-tests",
+        os.environ.get("SPARK_TEST_MASTER", "local[4]"),
+        "/dev/shm/spark-local", "4g")
     yield session
     session.stop()
 

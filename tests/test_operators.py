@@ -801,3 +801,13 @@ def test_anchor_text_rollup_external_only(spark, queries):
     assert sum(r["n_links"] for r in by_dom["example.com"]) == n_docs
     assert sum(r["n_links"] for r in by_dom["shop.co.uk"]) \
         == (n_docs + 1) // 2
+
+
+def test_light_pipelines_leave_session_conf_unchanged(spark, queries):
+    """Operators read the session's profile and never change it."""
+    session = spark.newSession()
+    before = session.conf.getAll
+    for name in ("lang_id", "bm25_search", "quality_repetition",
+                 "dedup_paragraph"):
+        queries[name].fn(session, SF).collect()
+    assert session.conf.getAll == before

@@ -30,13 +30,8 @@ def recall(approx: dict, exact: dict) -> float:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[16]")
-             .appName("ann-recall")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    from pdf4py_spark.session import build_session
+    spark = build_session("ann-recall", "local[16]", driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     from pdf4py_spark.operators import similarity as sim

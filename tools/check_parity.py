@@ -77,17 +77,9 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("parity-check")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-             .config("spark.buffer.size", "1048576")
-             .config("spark.python.unix.domain.socket.enabled", "true")
-             .config("spark.local.dir", "/dev/shm/spark-local")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    from pdf4py_spark.session import build_session
+    spark = build_session("parity-check", "local[8]",
+                          "/dev/shm/spark-local", "8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -29,12 +29,8 @@ def main():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "BENCH", "PLAN_AUDIT_r5.md")
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("plan-audit")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    from pdf4py_spark.session import build_session
+    spark = build_session("plan-audit", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod

@@ -53,20 +53,11 @@ def main():
     out_path = argv[1]
     only = set(argv[2:])
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[%d]" % cpus)
-             .appName("result-hash")
-             .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-             .config("spark.buffer.size", "1048576")
-             .config("spark.python.unix.domain.socket.enabled", "true")
-             .config("spark.local.dir", "/dev/shm/spark-local")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+    from pdf4py_spark.session import build_session
+    spark = build_session("result-hash", "local[%d]" % cpus,
+                          "/dev/shm/spark-local", "16g")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
