@@ -18,7 +18,8 @@ same bytes per url):
   unhexlified bytes (odd final nibble padded with 0)
 * pages are joined with a single b"\\n"
 
-No font/CMap decoding: output is the raw string-operand byte stream, which
+One interpreter (``_content_pieces``) feeds two sinks. The raw sink does no
+font/CMap decoding: its output is the raw string-operand byte stream, which
 is what makes byte-identity with the reference-driven oracle well defined.
 """
 
@@ -90,9 +91,21 @@ def _unhex(digits: bytes) -> bytes:
     return bytes.fromhex(digits.decode("ascii"))
 
 
-def text_from_content_bytes(content: bytes) -> bytes:
-    """Concatenate string operands of text-showing operators in content
-    order from one decoded content stream.
+def _raw_string(obj):
+    """PDF string object -> raw bytes (literal as-is, hex unhexlified),
+    else None."""
+    if isinstance(obj, LiteralString):
+        return obj.value
+    if isinstance(obj, HexString):
+        return _unhex(obj.value)
+    return None
+
+
+def _content_pieces(content: bytes):
+    """One decoded content stream -> ``(pieces, fonts)``: the shown
+    string operands in content order, and ``(len(pieces), font name)`` at
+    each ``Tf`` with a name operand (the first wins) and at each ``Q``
+    (the name ``q`` saved, None on an empty stack).
 
     Two tiers. The fast tier (``_text_fast``) drives one master regex per
     token — no Tokenizer object, no token objects, no int()/float()/
@@ -106,7 +119,8 @@ def text_from_content_bytes(content: bytes) -> bytes:
     document); the only correctness surface is the non-bail path, pinned
     against ``_text_exact`` by tests/test_text_interpreter_fast.py
     (edge cases, differential fuzz, every content stream of the
-    committed corpus) and by the golden hashes and bench checksum."""
+    committed corpus in both text modes) and by the golden hashes and
+    bench checksum."""
     data = excise_inline_images(content)
     try:
         return _text_fast(data)
@@ -114,10 +128,17 @@ def text_from_content_bytes(content: bytes) -> bytes:
         return _text_exact(data)
 
 
-def _text_exact(data: bytes) -> bytes:
-    """The parse-based reference interpreter (pre-r6 implementation)."""
+def text_from_content_bytes(content: bytes) -> bytes:
+    """Raw sink: concatenate string operands of text-showing operators in
+    content order from one decoded content stream."""
+    return b"".join(_content_pieces(content)[0])
+
+
+def _text_exact(data: bytes):
+    """The parse-based interpreter (ObjectScanner.parse() in content
+    mode); returns ``(pieces, fonts)`` like _content_pieces."""
     scanner = ObjectScanner(data, content_mode=True)
-    pieces = []
+    pieces, fonts, saved = [], [], []  # saved: the q/Q stack of font names
     pending = []  # operand stack since the previous operator
     while True:
         try:
@@ -129,29 +150,35 @@ def _text_exact(data: bytes) -> bytes:
             # operator): keep the text gathered so far. The oracle applies
             # the identical rule, so partial text stays byte-identical.
             break
-        if isinstance(obj, Operator):
-            name = obj.value
-            if name in _SHOW_OPS:
-                for operand in reversed(pending):
-                    if isinstance(operand, LiteralString):
-                        pieces.append(operand.value)
-                        break
-                    if isinstance(operand, HexString):
-                        pieces.append(_unhex(operand.value))
-                        break
-            elif name == "TJ":
-                for operand in reversed(pending):
-                    if isinstance(operand, list):
-                        for element in operand:
-                            if isinstance(element, LiteralString):
-                                pieces.append(element.value)
-                            elif isinstance(element, HexString):
-                                pieces.append(_unhex(element.value))
-                        break
-            pending.clear()
-        else:
+        if not isinstance(obj, Operator):
             pending.append(obj)
-    return b"".join(pieces)
+            continue
+        name = obj.value
+        if name in _SHOW_OPS:
+            for operand in reversed(pending):
+                raw = _raw_string(operand)
+                if raw is not None:
+                    pieces.append(raw)
+                    break
+        elif name == "TJ":
+            for operand in reversed(pending):
+                if isinstance(operand, list):
+                    for element in operand:
+                        raw = _raw_string(element)
+                        if raw is not None:
+                            pieces.append(raw)
+                    break
+        elif name == "Tf":
+            for operand in pending:
+                if isinstance(operand, str):  # a name
+                    fonts.append((len(pieces), operand))
+                    break
+        elif name == "q":  # the font in effect is the last event's
+            saved.append(fonts[-1][1] if fonts else None)
+        elif name == "Q":
+            fonts.append((len(pieces), saved.pop() if saved else None))
+        pending.clear()
+    return pieces, fonts
 
 
 class _FallBack(Exception):
@@ -205,7 +232,6 @@ _TOK = re.compile(
 
 _T_INT = (_K_INT, None)
 _T_FLOAT = (_K_FLOAT, None)
-_T_NAME = (_K_NAME, None)
 _T_AO = (_K_AO, None)
 _T_AC = (_K_AC, None)
 _T_DO = (_K_DO, None)
@@ -220,7 +246,7 @@ _LIT_KIND = {
     # b"stream" / b"<<" are bail constructs, handled inline
 }
 
-_SHOW_OPS_B = (b"Tj", b"'", b'"')
+_SHOW_OPS_B = tuple(op.encode() for op in _SHOW_OPS)
 _DIGIT_BYTES = frozenset(b"0123456789")
 
 
@@ -269,14 +295,15 @@ def _scan_hard_string(buf: bytes, i: int, n: int):
             i += 1
 
 
-def _text_fast(data: bytes) -> bytes:
-    """Regex-match-loop twin of _text_exact (see text_from_content_bytes).
+def _text_fast(data: bytes):
+    """Regex-match-loop twin of _text_exact (see _content_pieces).
 
     Replicates ObjectScanner.parse() (content_mode=True) as _text_exact
     drives it, token for token:
     * the operand stack only matters through 'the most recent
-      Literal/HexString' (show ops) and 'the most recent array' (TJ),
-      both cleared at every operator — tracked as two slots;
+      Literal/HexString' (show ops), 'the most recent array' (TJ) and
+      'the first name' (Tf), all cleared at every operator — tracked as
+      three slots;
     * the int reference-lookahead (``N N R`` -> Ref; bool counts as a
       generation number via isinstance, so ``N true R`` is a Ref too)
       with a one-slot hold for the token parse() pushes back; ``N G obj``
@@ -293,9 +320,10 @@ def _text_fast(data: bytes) -> bytes:
     buf = data
     n = len(buf)
     pos = 0
-    pieces = []
+    pieces, fonts, saved = [], [], []  # as in _text_exact
     last_str = None   # most recent string operand's decoded bytes
     last_arr = None   # most recent array operand's string pieces
+    first_name = None  # first name operand's bytes ('/' included)
     held = None       # one-slot pushback for the int lookahead
     match = _TOK.match
 
@@ -318,9 +346,10 @@ def _text_fast(data: bytes) -> bytes:
             if g == "s":
                 return (_K_STR, m.group("sv"))
             if g == "n":
-                if 0x23 in m.group("n"):
+                v = m.group("n")
+                if 0x23 in v:
                     raise _FallBack
-                return _T_NAME
+                return (_K_NAME, v)
             if g == "f":
                 return _T_FLOAT
             if g == "h":
@@ -450,7 +479,7 @@ def _text_fast(data: bytes) -> bytes:
     try:
         cur = scan()
     except _EndScan:
-        return b""
+        return pieces, fonts
 
     try:
         while True:
@@ -477,8 +506,17 @@ def _text_fast(data: bytes) -> bytes:
                 elif v == b"TJ":
                     if last_arr is not None:
                         pieces.extend(last_arr)
+                elif v == b"Tf":
+                    if first_name is not None:  # '#'-free printable ASCII
+                        fonts.append((len(pieces),
+                                      first_name[1:].decode("ascii")))
+                elif v == b"q":
+                    saved.append(fonts[-1][1] if fonts else None)
+                elif v == b"Q":
+                    fonts.append((len(pieces), saved.pop() if saved else None))
                 last_str = None
                 last_arr = None
+                first_name = None
                 if ended:
                     break
                 cur = nxt_tok
@@ -488,6 +526,8 @@ def _text_fast(data: bytes) -> bytes:
                 cur = scan()
                 continue
             if k in (_K_FLOAT, _K_NAME, _K_BOOL, _K_NULL):
+                if k == _K_NAME and first_name is None:
+                    first_name = v
                 cur = nxt()
                 continue
             if k == _K_AO:
@@ -501,7 +541,7 @@ def _text_fast(data: bytes) -> bytes:
             break  # ']' / keyword / '>>' at top level -> end
     except _EndScan:
         pass
-    return b"".join(pieces)
+    return pieces, fonts
 
 
 def _content_streams(doc: DocumentParser, contents):
@@ -538,8 +578,9 @@ def extract_pdf_text(doc: DocumentParser, pages=None) -> bytes:
 #
 # New capability beyond the reference (which stops at raw string operands):
 # show-op strings are decoded through the page's font resources — ToUnicode
-# CMaps, base encodings, Differences (kernel.fonts). The oracle generator
-# mirrors THIS interpreter over the reference parser, so the byte-identity
+# CMaps, base encodings, Differences (kernel.fonts), with the pieces and
+# font events of the raw mode's two tiers (_content_pieces). The oracle
+# generator mirrors this over the reference parser, so the byte-identity
 # gate covers two independent parsing stacks feeding one decode algorithm.
 
 def pages_with_resources(doc: DocumentParser):
@@ -646,24 +687,29 @@ def _simple_spec(doc: DocumentParser, font: dict, spec: dict) -> None:
             pass
 
 
-def font_decoders(doc: DocumentParser, resources) -> dict:
-    """Font resource name -> decoder fn(bytes) -> str."""
-    from .fonts import build_font_decoder
-
+def _fonts_of(doc: DocumentParser, resources):
+    """(name, font dict) for each entry of a Resources' Font dict."""
     if isinstance(resources, Ref):
         resources = doc.resolve(resources)
     if not isinstance(resources, dict):
-        return {}
+        return
     fonts = resources.get("Font")
     if isinstance(fonts, Ref):
         fonts = doc.resolve(fonts)
     if not isinstance(fonts, dict):
-        return {}
-    out = {}
+        return
     for name, fref in fonts.items():
         font = doc.resolve(fref) if isinstance(fref, Ref) else fref
-        if not isinstance(font, dict):
-            continue
+        if isinstance(font, dict):
+            yield name, font
+
+
+def font_decoders(doc: DocumentParser, resources) -> dict:
+    """Font resource name -> decoder fn(bytes) -> str."""
+    from .fonts import build_font_decoder
+
+    out = {}
+    for name, font in _fonts_of(doc, resources):
         bf = font.get("BaseFont")
         if isinstance(bf, Ref):  # indirect names are legal (review r5)
             bf = doc.resolve(bf)
@@ -709,19 +755,7 @@ def fonts_census(doc: DocumentParser):
 
     lines = set()
     for _page, resources in pages_with_resources(doc):
-        if isinstance(resources, Ref):
-            resources = doc.resolve(resources)
-        if not isinstance(resources, dict):
-            continue
-        fonts = resources.get("Font")
-        if isinstance(fonts, Ref):
-            fonts = doc.resolve(fonts)
-        if not isinstance(fonts, dict):
-            continue
-        for name, fref in fonts.items():
-            font = doc.resolve(fref) if isinstance(fref, Ref) else fref
-            if not isinstance(font, dict):
-                continue
+        for name, font in _fonts_of(doc, resources):
             enc = font.get("Encoding")
             if isinstance(enc, Ref):
                 enc = doc.resolve(enc)
@@ -734,61 +768,19 @@ def fonts_census(doc: DocumentParser):
 
 
 def unicode_from_content_bytes(content: bytes, decoders: dict) -> str:
-    """Interpret one decoded content stream tracking the text-font state
-    (Tf selects, q/Q save/restore) and decode every shown string."""
+    """Unicode sink: decode every shown string of one decoded content
+    stream with the decoder of the font in effect at it (Tf selects, q/Q
+    save/restore; no font or an unknown name decodes as latin-1)."""
     from .fonts import latin1_decoder
 
-    scanner = ObjectScanner(excise_inline_images(content), content_mode=True)
-    pieces = []
-    pending = []
-    current = None
-    gs_stack = []
-    while True:
-        try:
-            obj = scanner.parse()
-        except StopIteration:
-            break
-        except Exception:  # same partial-tolerance rule as the raw mode
-            break
-        if not isinstance(obj, Operator):
-            pending.append(obj)
-            continue
-        name = obj.value
-        if name == "Tf":
-            for operand in pending:
-                if isinstance(operand, str):
-                    current = decoders.get(operand)
-                    break
-        elif name == "q":
-            gs_stack.append(current)
-        elif name == "Q":
-            current = gs_stack.pop() if gs_stack else None
-        elif name in _SHOW_OPS or name == "TJ":
-            decode = current if current is not None else latin1_decoder
-            if name == "TJ":
-                for operand in reversed(pending):
-                    if isinstance(operand, list):
-                        for element in operand:
-                            raw = _string_operand(element)
-                            if raw is not None:
-                                pieces.append(decode(raw))
-                        break
-            else:
-                for operand in reversed(pending):
-                    raw = _string_operand(operand)
-                    if raw is not None:
-                        pieces.append(decode(raw))
-                        break
-        pending = []
-    return "".join(pieces)
-
-
-def _string_operand(obj):
-    if isinstance(obj, LiteralString):
-        return obj.value
-    if isinstance(obj, HexString):
-        return _unhex(obj.value)
-    return None
+    pieces, fonts = _content_pieces(content)
+    out = []
+    decode, at = latin1_decoder, 0
+    for end, font in fonts:
+        out.extend(map(decode, pieces[at:end]))
+        decode, at = decoders.get(font) or latin1_decoder, end
+    out.extend(map(decode, pieces[at:]))
+    return "".join(out)
 
 
 def extract_pdf_text_unicode(doc: DocumentParser) -> bytes:
@@ -823,16 +815,6 @@ def _rc(doc: DocumentParser, obj, depth: int = 16):
             return None
         n += 1
     return obj
-
-
-def _raw_string(obj):
-    """PDF string object -> raw bytes (literal as-is, hex unhexlified),
-    else None."""
-    if isinstance(obj, LiteralString):
-        return obj.value
-    if isinstance(obj, HexString):
-        return _unhex(obj.value)
-    return None
 
 
 def doc_metadata(doc: DocumentParser) -> str:

@@ -1,20 +1,23 @@
-"""Pin the raw-text fast interpreter (textextract._text_fast) against the
-parse-based exact interpreter (_text_exact).
+"""Pin the fast content-stream interpreter (textextract._text_fast)
+against the parse-based exact interpreter (_text_exact).
 
-text_from_content_bytes runs the fast tier and, on ``_FallBack``, re-runs
-_text_exact; so a bail is correct by construction and the only
-correctness surface is the non-bail path. These tests check that:
+_content_pieces runs the fast tier and, on ``_FallBack``, re-runs
+_text_exact; both return ``(pieces, fonts)`` — the shown strings and the
+Tf/q/Q font events — which the raw and the unicode sink consume. So a
+bail is correct by construction and the only correctness surface is the
+non-bail path. These tests check that:
 
 * on every stream the fast tier accepts it returns exactly what
-  _text_exact returns (or raises the same exception) — two
+  _text_exact returns (or raises the same exception) — three
   hand-picked edge-case lists and two deterministic fuzz generators;
 * the constructs it does not replicate bail instead of diverging, and a
   bail that ends in a lexical error raises _text_exact's exception (type
   and message) from the public entry point, since that exception is what
   quarantines the document;
-* it accepts every content stream of the committed corpus, so an edit
-  that starts bailing on real content fails here instead of only
-  running slower.
+* it accepts every content stream of the committed corpus in both text
+  modes, so an edit that starts bailing on real content fails here
+  instead of only running slower;
+* the unicode sink applies the font events (a hand-checked case).
 
 Longer soaks of both generators run off-CI by changing the seed and the
 trial count."""
@@ -30,7 +33,7 @@ from pdf4py_spark.sources.corpus import FIXTURE_PAGES, PASSWORDS
 
 
 def _outcome(fn, data: bytes):
-    """('ok', bytes) or (exception type name, message)."""
+    """('ok', result) or (exception type name, message)."""
     try:
         return ("ok", fn(data))
     except Exception as exc:  # noqa: BLE001 - comparing outcomes
@@ -133,6 +136,20 @@ LEXICAL_EDGE_CASES = [
     b"[" * 200 + b"<< /K (v) >>" + b"]" * 200 + b" TJ",
 ]
 
+FONT_EDGE_CASES = [
+    # Q restores what q saved; Q on an empty stack resets to no font
+    b"/F1 1 Tf q /F2 1 Tf (a) Tj Q (b) Tj",
+    b"Q (a) Tj",
+    # Tf without a top-level name operand changes nothing; the first
+    # name wins; names inside arrays and dicts do not count
+    b"12 Tf (a) Tj",
+    b"/F1 /F2 12 Tf (a) Tj",
+    b"[/F1] 12 Tf (a) Tj",
+    b"<< /F /F1 >> 12 Tf (a) Tj",
+    # the font event survives a trailing EOF
+    b"/F1 12 Tf",
+]
+
 
 def test_fast_interpreter_edge_cases_match_exact():
     mismatches, _ = _mismatches(EDGE_CASES)
@@ -144,10 +161,16 @@ def test_fast_interpreter_lexical_edge_cases_match_exact():
     assert not mismatches, mismatches
 
 
+def test_fast_interpreter_font_state_edge_cases_match_exact():
+    mismatches, accepted = _mismatches(FONT_EDGE_CASES)
+    assert not mismatches, mismatches
+    assert accepted == len(FONT_EDGE_CASES)
+
+
 def test_fast_interpreter_fuzz_matches_exact():
     rng = random.Random(987123)
     ops = [b"Tj", b"TJ", b"'", b'"', b"BT", b"ET", b"Td", b"R", b"re",
-           b"gs", b"Do", b"q", b"Q"]
+           b"gs", b"Do", b"q", b"Q", b"Tf"]
     kws = [b"obj", b"endobj", b"stream", b"trailer", b"xref", b"true",
            b"false", b"null", b"startxref", b"endstream"]
 
@@ -188,7 +211,7 @@ def test_fast_interpreter_fuzz_matches_exact():
 def test_fast_interpreter_lexical_fuzz_matches_exact():
     rng = random.Random(31337)
     ops = [b"Tj", b"TJ", b"'", b'"', b"BT", b"ET", b"Td", b"R", b"re",
-           b"gs", b"Do", b"q", b"Q", b"T#6a", b"truex"]
+           b"gs", b"Do", b"q", b"Q", b"T#6a", b"truex", b"Tf"]
     kws = [b"obj", b"endobj", b"stream", b"trailer", b"xref", b"true",
            b"false", b"null", b"startxref", b"endstream", b"<<", b">>"]
 
@@ -254,8 +277,8 @@ def test_fallback_constructs_bail_not_diverge():
     for data in BAIL_CASES + QUARANTINE_CASES:
         with pytest.raises(TE._FallBack):
             TE._text_fast(data)
-        # and the public entry point yields the exact outcome
-        assert (_outcome(TE.text_from_content_bytes, data)
+        # and the shared entry point yields the exact outcome
+        assert (_outcome(TE._content_pieces, data)
                 == _outcome(TE._text_exact, TE.excise_inline_images(data))
                 ), data
     for data in QUARANTINE_CASES:
@@ -263,20 +286,37 @@ def test_fallback_constructs_bail_not_diverge():
 
 
 def test_fast_tier_accepts_every_corpus_stream(monkeypatch):
-    # every content stream the raw extraction of the committed corpus
-    # interprets must take the fast tier (no _FallBack) and match exact
+    # every content stream the extraction of the committed corpus
+    # interprets, in each text mode, must take the fast tier (no
+    # _FallBack) and match exact on (pieces, fonts)
     streams = []
-    real = TE.text_from_content_bytes
+    real = TE._content_pieces
 
     def spy(content):
         streams.append(TE.excise_inline_images(content))
         return real(content)
 
-    monkeypatch.setattr(TE, "text_from_content_bytes", spy)
+    monkeypatch.setattr(TE, "_content_pieces", spy)
     table = pq.read_table(FIXTURE_PAGES, columns=["url", "html"])
-    for url, payload in zip(*(col.to_pylist() for col in table.columns)):
-        extract_document(payload, PASSWORDS.get(url))
+    rows = list(zip(*(col.to_pylist() for col in table.columns)))
+    for mode in ("raw", "unicode"):
+        streams.clear()
+        for url, payload in rows:
+            extract_document(payload, PASSWORDS.get(url), text_mode=mode)
 
-    assert len(streams) == 911
-    for data in streams:
-        assert TE._text_fast(data) == TE._text_exact(data)
+        assert len(streams) == 911, mode
+        for data in streams:
+            assert TE._text_fast(data) == TE._text_exact(data), mode
+
+
+def test_unicode_sink_applies_font_events():
+    decoders = {"F1": lambda b: b.decode("latin-1").upper(),
+                "F2": lambda b: "<%s>" % b.decode("latin-1")}
+    content = (b"/F1 1 Tf (a) Tj q /F2 1 Tf [(b) (c)] TJ Q (d) Tj "
+               b"/F9 1 Tf (e) Tj Q (f) Tj")
+    # F1; F2 inside q..Q; Q restores F1; unknown F9 and Q on an empty
+    # stack both decode as latin-1
+    assert TE.unicode_from_content_bytes(content, decoders) == "A<b><c>Def"
+    # Q on an empty stack drops a known font too
+    assert TE.unicode_from_content_bytes(
+        b"/F1 1 Tf (a) Tj Q (b) Tj", decoders) == "Ab"

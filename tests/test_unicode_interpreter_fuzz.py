@@ -1,6 +1,8 @@
-"""Differential fuzz of the unicode content-stream interpreter: OUR
-object scanner (kernel.textextract.unicode_from_content_bytes) versus the
-REFERENCE's SequentialParser driving the identical interpreter logic
+"""Differential fuzz of the unicode content-stream interpretation: OUR
+two interpreter tiers (the fast tier with the parse-based exact fallback,
+kernel.textextract._content_pieces) under the unicode sink
+(unicode_from_content_bytes) versus the REFERENCE's SequentialParser
+driving the identical interpreter logic
 (tools.make_oracle.unicode_from_content), with the same font decoders.
 
 Pins the parts byte-identity depends on across two independent tokenizer
