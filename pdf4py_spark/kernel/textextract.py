@@ -107,20 +107,24 @@ def _content_pieces(content: bytes):
     each ``Tf`` with a name operand (the first wins) and at each ``Q``
     (the name ``q`` saved, None on an empty stack).
 
-    Two tiers. The fast tier (``_text_fast``) drives one master regex per
-    token — no Tokenizer object, no token objects, no int()/float()/
-    utf8-decode for operands whose CLASS is all the interpreter needs —
-    and consumes dictionaries natively (transparent operands, parse()'s
-    exact error shapes). It raises ``_FallBack`` on ANY construct or
-    lexical irregularity it does not replicate bit-for-bit, and the
-    parse-based ``_text_exact`` re-runs the stream. Every bail therefore
-    yields the exact result by construction, including the exception a
-    lexical error on the first token raises (it quarantines the
-    document); the only correctness surface is the non-bail path, pinned
-    against ``_text_exact`` by tests/test_text_interpreter_fast.py
-    (edge cases, differential fuzz, every content stream of the
-    committed corpus in both text modes) and by the golden hashes and
-    bench checksum."""
+    Two tiers, and three stages. The fast tier (``_text_fast``) is an
+    operator matcher: one C-level regex match per operator that has an
+    effect (show ops, TJ, Tf, q, Q), consuming its operand run and the
+    effect-free operators before it, with no token objects and no
+    int()/float()/utf8-decode for operands whose CLASS is all the
+    interpreter needs. Where that match fails it hands the rest of the
+    stream to the token loop (``_text_tokens``: one master regex match per
+    token), which consumes dictionaries natively and replicates parse()'s
+    int lookahead and error shapes. Either raises ``_FallBack`` on ANY
+    construct or lexical irregularity they do not replicate bit-for-bit,
+    and the parse-based ``_text_exact`` re-runs the stream. Every bail
+    therefore yields the exact result by construction, including the
+    exception a lexical error on the first token raises (it quarantines
+    the document); the only correctness surface is the non-bail path,
+    pinned against ``_text_exact`` by tests/test_text_interpreter_fast.py
+    (edge cases, differential fuzz, mutated corpus windows, every content
+    stream of the committed corpus in both text modes, with no handover
+    to the token loop) and by the golden hashes and bench checksum."""
     data = excise_inline_images(content)
     try:
         return _text_fast(data)
@@ -182,7 +186,7 @@ def _text_exact(data: bytes):
 
 
 class _FallBack(Exception):
-    """Raised by _text_fast on any construct or lexical irregularity it
+    """Raised by the fast tier on any construct or lexical irregularity it
     does not replicate bit-for-bit; the caller re-runs _text_exact."""
 
 
@@ -295,8 +299,9 @@ def _scan_hard_string(buf: bytes, i: int, n: int):
             i += 1
 
 
-def _text_fast(data: bytes):
-    """Regex-match-loop twin of _text_exact (see _content_pieces).
+def _text_tokens(data: bytes, pos: int, pieces, fonts, saved):
+    """The token loop: _text_fast's handover for the rest of the stream
+    from operator boundary ``pos``, appending to the state it has built.
 
     Replicates ObjectScanner.parse() (content_mode=True) as _text_exact
     drives it, token for token:
@@ -319,8 +324,6 @@ def _text_fast(data: bytes):
       nothing."""
     buf = data
     n = len(buf)
-    pos = 0
-    pieces, fonts, saved = [], [], []  # as in _text_exact
     last_str = None   # most recent string operand's decoded bytes
     last_arr = None   # most recent array operand's string pieces
     first_name = None  # first name operand's bytes ('/' included)
@@ -473,7 +476,7 @@ def _text_fast(data: bytes):
                 raise _EndScan      # value parse would breach
             consume_value(depth)
 
-    # first token: EOF -> empty content; a lexical error must PROPAGATE
+    # first token: EOF -> nothing to add; a lexical error must PROPAGATE
     # with the byte-level lexer's exact type/message (the document
     # quarantines on it) -> scan() bails and the re-run raises it
     try:
@@ -542,6 +545,128 @@ def _text_fast(data: bytes):
     except _EndScan:
         pass
     return pieces, fonts
+
+
+# The operator matcher. Its token sub-patterns copy _TOK's byte classes
+# and alternative order, and each is possessive or atomic, so it splits
+# bytes into tokens exactly like _TOK (a backtracking version would read
+# ``/abTj`` as ``/ab`` + ``Tj``). It accepts a subset of _TOK's tokens:
+# literal strings without nested parens or an octal escape above \377 (or
+# a 3-digit one with an 8 or 9), hex strings, numbers, names without '#',
+# flat arrays of those, and flat dicts with name keys whose values are
+# those, flat arrays or true/false/null. Operator words start with none
+# of [0-9+-.] or a keyword prefix (_TOK's <nb>/<lit> win there), contain
+# no '#', and are not R (the int lookahead's Ref).
+_FILL = rb"[\x00\t\n\x0c\r ]*+(?:%[^\n]*+\n[\x00\t\n\x0c\r ]*+)*+"
+_BOUNDARY = rb"(?![^\x00-\x20\x7f-\xff()<>\[\]{}/%])"  # no regular byte
+_STR = (rb"\((?:[^()\\]++"
+        rb"|\\(?:[0-3][0-7][0-7]|[0-9]{1,2}+(?![0-9])|[^0-9]))*+\)")
+_HEX = rb"<[0-9a-fA-F\x00\t\n\x0c\r ]*+>"
+_NUM = rb"[+-]?+(?>[0-9]++(?:\.[0-9]*+)?+|\.[0-9]++)"
+_NAME = rb"/[^\x00-\x20\x7f-\xff()<>\[\]{}/%#]*+"
+_SCALAR = rb"(?>" + _STR + rb"|" + _NUM + rb"|" + _NAME + rb"|" + _HEX + rb")"
+_ELEMENTS = rb"(?:" + _FILL + _SCALAR + rb")*+"
+_ARRAY = rb"\[" + _ELEMENTS + _FILL + rb"\]"
+_DICT = (rb"<<(?:" + _FILL + _NAME + _FILL + rb"(?>" + _SCALAR + rb"|"
+         + _ARRAY + rb"|true|false|null))*+" + _FILL + rb">>")
+_OPERANDS = (rb"(?:" + _FILL + rb"(?>" + _SCALAR + rb"|" + _ARRAY + rb"|"
+             + _DICT + rb"))*+")
+_EFFECT_OP = rb"(?:Tj|TJ|Tf|'|\"|q|Q)" + _BOUNDARY
+_QUIET_OP = (rb"(?!" + _EFFECT_OP + rb"|true|false|null|stream|endobj|obj"
+             rb"|trailer|xref|startxref|endstream|R" + _BOUNDARY + rb")"
+             rb"[^\x00-\x20\x7f-\xff()<>\[\]{}/%#0-9+.\-]"
+             rb"[^\x00-\x20\x7f-\xff()<>\[\]{}/%#]*+" + _BOUNDARY)
+
+# One match runs from an operator boundary through the next operator with
+# an effect; the quiet operators before it (BT, Td, cm, ...) ride along.
+# The alternative that matched is m.lastgroup: each ends with its own
+# capture. No capture sits inside a repeated group: Python 3.11.7's re
+# raises "SystemError: The span of capturing group is wrong" for a named
+# group inside a possessive repeat, e.g. on (a1b) /CA TJ [  ] <556 > 1.
+_OPERATOR = re.compile(
+    rb"(?:" + _OPERANDS + _FILL + _QUIET_OP + rb")*+" + _FILL + rb"(?:"
+    rb"(?P<tj>" + _STR + rb"|" + _HEX + rb")" + _FILL + rb"(?:Tj|')"
+    + _BOUNDARY
+    + rb"|(?P<tf>" + _NAME + rb")" + _FILL + _NUM + _FILL + rb"Tf" + _BOUNDARY
+    + rb"|\[(?P<tja>" + _ELEMENTS + rb")" + _FILL + rb"\]" + _FILL + rb"TJ"
+    + _BOUNDARY
+    + rb"|(?P<run>" + _OPERANDS + rb")" + _FILL + rb"(?P<op>" + _EFFECT_OP
+    + rb")|" + _OPERANDS + _FILL + rb"(?P<eof>)\Z)")
+#: one operand of a matched run (lastgroup None: a number or a dict)
+_RUN_OPERAND = re.compile(
+    _FILL + rb"(?:(?P<s>" + _STR + rb"|" + _HEX + rb")|\[(?P<a>" + _ELEMENTS
+    + rb")" + _FILL + rb"\]|(?P<n>" + _NAME + rb")|" + _NUM + rb"|" + _DICT
+    + rb")")
+#: one element of a matched array; the group holds its string, if any
+_ELEMENT = re.compile(
+    _FILL + rb"(?:(" + _STR + rb"|" + _HEX + rb")|" + _NUM + rb"|" + _NAME
+    + rb")")
+
+
+def _string_value(token: bytes) -> bytes:
+    """A matched string token, delimiters included -> its bytes, decoded
+    as _text_tokens decodes it."""
+    if token[0] == 0x3C:  # '<'
+        return _unhex(token[1:-1].translate(None, _WS_BYTES))
+    if 0x5C in token:  # backslash escapes
+        return _scan_hard_string(token, 1, len(token))[0]
+    return token[1:-1]
+
+
+def _array_pieces(elements: bytes):
+    return [_string_value(t) for t in _ELEMENT.findall(elements) if t]
+
+
+def _text_fast(data: bytes):
+    """The fast tier (see _content_pieces): the operator matcher. One
+    _OPERATOR match runs from an operator boundary through the next
+    operator with an effect, with direct shapes for the common ``(s) Tj``,
+    ``<h> Tj``, ``/F n Tf`` and ``[...] TJ``; otherwise the run's operands
+    are re-scanned for the last string, the last array and the first
+    name. Where the match fails, the token loop (_text_tokens) takes the
+    rest of the stream from that boundary, where the three slots are empty
+    and nothing is held. The matcher applies an operator's effect before
+    its follow-on token scans; that token is the token loop's first, and a
+    lexical error there bails the whole stream, so an effect that stands
+    is one parse()'s pre-fetch would also have applied."""
+    pieces, fonts, saved = [], [], []  # as in _text_exact
+    match = _OPERATOR.match
+    pos = 0
+    while True:
+        m = match(data, pos)
+        if m is None:
+            return _text_tokens(data, pos, pieces, fonts, saved)
+        pos = m.end()
+        g = m.lastgroup
+        if g == "tj":
+            pieces.append(_string_value(m["tj"]))
+        elif g == "tf":
+            fonts.append((len(pieces), m["tf"][1:].decode("ascii")))
+        elif g == "tja":
+            pieces.extend(_array_pieces(m["tja"]))
+        elif g == "eof":  # after operands without an operator, or none
+            return pieces, fonts
+        elif m["op"] == b"q":
+            saved.append(fonts[-1][1] if fonts else None)
+        elif m["op"] == b"Q":
+            fonts.append((len(pieces), saved.pop() if saved else None))
+        else:  # the generic shape of a show op, TJ or Tf
+            last = {}  # the last string and array, the first name
+            for o in _RUN_OPERAND.finditer(data, *m.span("run")):
+                og = o.lastgroup
+                if og == "n":
+                    last.setdefault("n", o["n"])
+                elif og is not None:
+                    last[og] = o[og]
+            op = m["op"]
+            if op == b"TJ":
+                if "a" in last:
+                    pieces.extend(_array_pieces(last["a"]))
+            elif op == b"Tf":
+                if "n" in last:
+                    fonts.append((len(pieces), last["n"][1:].decode("ascii")))
+            elif "s" in last:
+                pieces.append(_string_value(last["s"]))
 
 
 def _content_streams(doc: DocumentParser, contents):

@@ -3,23 +3,27 @@ against the parse-based exact interpreter (_text_exact).
 
 _content_pieces runs the fast tier and, on ``_FallBack``, re-runs
 _text_exact; both return ``(pieces, fonts)`` — the shown strings and the
-Tf/q/Q font events — which the raw and the unicode sink consume. So a
-bail is correct by construction and the only correctness surface is the
-non-bail path. These tests check that:
+Tf/q/Q font events — which the raw and the unicode sink consume. The fast
+tier is an operator matcher (one regex match per operator) that hands the
+rest of a stream over to the token loop (_text_tokens) where its match
+fails. So a bail is correct by construction and the only correctness
+surface is the non-bail path. These tests check that:
 
 * on every stream the fast tier accepts it returns exactly what
-  _text_exact returns (or raises the same exception) — three
-  hand-picked edge-case lists and two deterministic fuzz generators;
+  _text_exact returns (or raises the same exception) — four hand-picked
+  edge-case lists, two deterministic fuzz generators and mutated windows
+  of the committed corpus's content streams;
 * the constructs it does not replicate bail instead of diverging, and a
   bail that ends in a lexical error raises _text_exact's exception (type
   and message) from the public entry point, since that exception is what
   quarantines the document;
 * it accepts every content stream of the committed corpus in both text
-  modes, so an edit that starts bailing on real content fails here
-  instead of only running slower;
+  modes, and the operator matcher consumes each one without handing over
+  to the token loop, so an edit that starts bailing or narrows the
+  matcher on real content fails here instead of only running slower;
 * the unicode sink applies the font events (a hand-checked case).
 
-Longer soaks of both generators run off-CI by changing the seed and the
+Longer soaks of the generators run off-CI by changing the seed and the
 trial count."""
 
 import random
@@ -65,6 +69,43 @@ def _mismatches(inputs):
         if got != want:
             out.append((data, got, want))
     return out, accepted
+
+
+@pytest.fixture
+def handovers(monkeypatch):
+    """Records the position of every handover from the operator matcher
+    to the token loop."""
+    seen = []
+    real = TE._text_tokens
+
+    def spy(data, pos, *state):
+        seen.append(pos)
+        return real(data, pos, *state)
+
+    monkeypatch.setattr(TE, "_text_tokens", spy)
+    return seen
+
+
+@pytest.fixture(scope="module")
+def corpus_streams():
+    """mode -> every content stream (inline images excised) that the
+    extraction of the committed corpus interprets in that text mode."""
+    table = pq.read_table(FIXTURE_PAGES, columns=["url", "html"])
+    rows = list(zip(*(col.to_pylist() for col in table.columns)))
+    real = TE._content_pieces
+    out = {}
+    for mode in ("raw", "unicode"):
+        streams = out[mode] = []
+
+        def spy(content):
+            streams.append(TE.excise_inline_images(content))
+            return real(content)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(TE, "_content_pieces", spy)
+            for url, payload in rows:
+                extract_document(payload, PASSWORDS.get(url), text_mode=mode)
+    return out
 
 
 EDGE_CASES = [
@@ -150,6 +191,67 @@ FONT_EDGE_CASES = [
     b"/F1 12 Tf",
 ]
 
+MATCHER_EDGE_CASES = [
+    # operator boundaries: no space, a longer word, a '#' word
+    b"(a)Tj",
+    b"(a) Tjx",
+    b"(a) Tj#",
+    # a direct shape that does not fit falls to the generic run
+    b"(a) (b) Tj",
+    b"(a) [(b)] Tj",
+    b"[(a)] (b) TJ",
+    b"1 2 (a) 3 Tj",
+    b"0 0 (a) \"",
+    b"(a) 'x (b) '",
+    # dicts are transparent: their strings and names never count
+    b"(a) << /X (b) >> Tj",
+    b"<< /F /F1 >> /F2 1 Tf",
+    b"<< /A [/B (c) 1] /C true >> (a) Tj",
+    b"<< /A [1 0 R] >> (a) Tj",
+    # names with '#', a Ref operand: the matcher hands over
+    b"/F1#20 1 Tf",
+    b"/F1 1 0 R Tf",
+    b"(a) Tj (b) R Tj",
+    # keyword prefixes never lex as operator words
+    b"objx",
+    b"xrefs",
+    b"(a) Tj nullx (b) Tj",
+    # octal escapes up to and past \377, digits 8/9, backslash-newline
+    b"(\\0) Tj",
+    b"(\\07) Tj",
+    b"(\\377) Tj",
+    b"(\\400) Tj",
+    b"(\\777) Tj",
+    b"(\\128) Tj",
+    b"(\\8) Tj",
+    b"(a\\\nb) Tj",
+    b"(\\(a\\)) '",
+    # an escape above \377 in a string nobody shows ends extraction
+    b"(a) Tj (\\400) (b) Tj",
+    b"(a) Tj << /A (\\389) >> (b) Tj",
+    # hex with inner whitespace; empty array, dict
+    b"<4 1>Tj",
+    b"[] TJ",
+    b"[<41> (b\\)) 3 /N 1.5] TJ",
+    b"[(a) %(x)\n (b)] TJ",
+    b"[(a) %(x)\n] TJ",
+    b"[(a) %(x)\n] (b) TJ",
+    b"<<>> (a) Tj",
+    b"<< /A 1 2 >> (a) Tj",
+    b"<< /A truex >> (a) Tj",
+    # numbers split like the lexer splits them
+    b"1.5.5 12Tj",
+    b"(a) 5.. Tj",
+    # a name swallows the word and digits after it: no operator or
+    # number operand here
+    b"(a) /abTj",
+    b"/abTj (a) Tj",
+    b"/F12 Tf",
+    # trailing filler
+    b"(a) Tj %c\n",
+    b"(a) Tj   ",
+]
+
 
 def test_fast_interpreter_edge_cases_match_exact():
     mismatches, _ = _mismatches(EDGE_CASES)
@@ -165,6 +267,11 @@ def test_fast_interpreter_font_state_edge_cases_match_exact():
     mismatches, accepted = _mismatches(FONT_EDGE_CASES)
     assert not mismatches, mismatches
     assert accepted == len(FONT_EDGE_CASES)
+
+
+def test_fast_interpreter_matcher_edge_cases_match_exact():
+    mismatches, _ = _mismatches(MATCHER_EDGE_CASES)
+    assert not mismatches, mismatches
 
 
 def test_fast_interpreter_fuzz_matches_exact():
@@ -285,28 +392,64 @@ def test_fallback_constructs_bail_not_diverge():
         assert _outcome(TE._text_exact, data)[0] != "ok", data
 
 
-def test_fast_tier_accepts_every_corpus_stream(monkeypatch):
+def test_fast_tier_accepts_every_corpus_stream(corpus_streams, handovers):
     # every content stream the extraction of the committed corpus
     # interprets, in each text mode, must take the fast tier (no
-    # _FallBack) and match exact on (pieces, fonts)
-    streams = []
-    real = TE._content_pieces
-
-    def spy(content):
-        streams.append(TE.excise_inline_images(content))
-        return real(content)
-
-    monkeypatch.setattr(TE, "_content_pieces", spy)
-    table = pq.read_table(FIXTURE_PAGES, columns=["url", "html"])
-    rows = list(zip(*(col.to_pylist() for col in table.columns)))
+    # _FallBack), be consumed by the operator matcher alone (no handover
+    # to the token loop) and match exact on (pieces, fonts)
     for mode in ("raw", "unicode"):
-        streams.clear()
-        for url, payload in rows:
-            extract_document(payload, PASSWORDS.get(url), text_mode=mode)
-
+        streams = corpus_streams[mode]
         assert len(streams) == 911, mode
         for data in streams:
             assert TE._text_fast(data) == TE._text_exact(data), mode
+        assert not handovers, (mode, len(handovers))
+
+
+def _mutated_window(rng, streams):
+    """A seeded window of a corpus content stream, mutated one way."""
+    data = rng.choice(streams)
+    a = rng.randrange(len(data))
+    w = bytearray(data[a:a + rng.randint(8, 2000)])
+    kind = rng.randrange(4)
+    if kind == 0:  # byte substitution
+        for _ in range(rng.randint(1, 3)):
+            w[rng.randrange(len(w))] = rng.choice(
+                b"()[]<>/\\%#R0123456789 .+-TjJ'\"\xff")
+    elif kind == 1:  # truncation
+        del w[rng.randrange(len(w)):]
+    elif kind == 2:  # splice from another stream
+        other = rng.choice(streams)
+        b = rng.randrange(len(other))
+        at = rng.randrange(len(w) + 1)
+        w[at:at] = other[b:b + rng.randint(1, 80)]
+    else:  # short deletion
+        at = rng.randrange(len(w))
+        del w[at:at + rng.randint(1, 4)]
+    return bytes(w)
+
+
+def test_fast_interpreter_corpus_window_fuzz_matches_exact(corpus_streams,
+                                                           handovers):
+    # realistic content: windows of the corpus streams, mutated
+    rng = random.Random(20261017)
+    streams = corpus_streams["raw"]
+    mismatches = []
+    accepted = matched = 0
+    for _ in range(3000):
+        data = _mutated_window(rng, streams)
+        before = len(handovers)
+        got = _fast_outcome(data)
+        if got is None:
+            continue
+        accepted += 1
+        if len(handovers) == before:
+            matched += 1
+        want = _outcome(TE._text_exact, data)
+        if got != want:
+            mismatches.append((data, got, want))
+    assert not mismatches, mismatches[:3]
+    assert accepted >= 1000, accepted  # the non-bail path is exercised
+    assert matched >= 600, matched     # ... and the matcher alone
 
 
 def test_unicode_sink_applies_font_events():
