@@ -9,7 +9,8 @@ metrics, lineage, checkpoint/resume) a 10^12-document corpus needs.
 Layout:
     kernel/     pure-Python per-document parsing kernels (no Spark imports)
     functions/  Catalyst column-expression helpers (dispatch, salting, ...)
-    plans/      the extraction pipeline (mapInPandas plan assembly)
+    plans/      the extraction pipeline and map_rows, the one Python
+                map (MapInArrow)
     operators/  dataset-plane analytics (dedup, similarity, text stats)
     sources/    fixture/corpus builders and storage (parquet/manifest)
     streaming/  foreachBatch adapter for the stateless extraction kernel

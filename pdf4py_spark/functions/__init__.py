@@ -65,9 +65,9 @@ def balanced_repartition(df, num_partitions: int):
 
 
 def assert_no_per_row_python(df):
-    """CI guard: the physical plan must batch through Arrow (MapInPandas /
-    ArrowEvalPython) and never fall back to row-at-a-time Python
-    (BatchEvalPython). See SURVEY.md §7.3."""
+    """CI guard: the physical plan must batch through Arrow (MapInArrow
+    from plans.pipeline.map_rows / ArrowEvalPython) and never fall back
+    to row-at-a-time Python (BatchEvalPython). See SURVEY.md §7.3."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     if "BatchEvalPython" in plan:
         raise AssertionError(

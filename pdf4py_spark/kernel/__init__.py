@@ -1,9 +1,9 @@
 """Pure-Python per-document extraction kernels.
 
 Everything in this package is Spark-free and operates on ``bytes`` /
-``memoryview`` payloads so it can run batched inside an Arrow
-``mapInPandas`` worker (one Python call per Arrow batch, zero per-row
-dispatch from the JVM).
+``memoryview`` payloads so it can run batched inside the Arrow
+``map_rows`` shell (``plans.pipeline``, ``mapInArrow``: one Python call
+per Arrow batch, zero per-row dispatch from the JVM).
 
 Behavioral contract: byte-identical results versus the reference
 implementation at /root/reference (dipietrantonio/pdf4py), including its

@@ -5,9 +5,10 @@ Two input shapes:
 * the ``documents`` test table, wrapped into HTML payloads by a pure
   Catalyst expression (so the SQL oracle can state the expected text
   exactly: boilerplate strip must return the original text), and
-* the committed 30-row ``pages`` fixture (reference corpus), whose oracle
-  parquet was produced from the reference implementation — the md5 check
-  here IS the byte-identity invariant running inside the correctness gate.
+* the committed 44-row ``pages`` fixture (reference corpus, 32 of them
+  PDFs), whose oracle parquet was produced from the reference
+  implementation — the md5 check here IS the byte-identity invariant
+  running inside the correctness gate.
 """
 
 from __future__ import annotations
@@ -17,7 +18,10 @@ import os
 from pyspark.sql import functions as F
 
 from . import QuerySpec, table
-from ..plans.pipeline import extract_pages
+from ..kernel import textextract
+from ..kernel.htmlextract import extract_html_main
+from ..kernel.parser import DocumentParser
+from ..plans.pipeline import extract_pages, map_rows
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -145,239 +149,111 @@ WHERE parse_ok
 """.format(oracle=FIXTURE_ORACLE)
 
 
-def _fixture_pdf_rows(pdf):
-    """Shared per-batch iteration for the fixture-PDF census kernels:
-    yields (url, data, password) for each %PDF- payload, applying the
-    str-vs-bytes password rule once (review finding: this preamble was
-    copy-pasted into every census generator, so a password-handling
-    change could silently diverge between gates)."""
-    for url, payload, password, pw_bytes in zip(
-            pdf["url"], pdf["html"], pdf["password"],
-            pdf["password_is_bytes"]):
-        data = bytes(payload)
-        if not data.startswith(b"%PDF-"):
-            continue
-        pw = password if isinstance(password, str) else None
-        if pw is not None and pw_bytes:
-            pw = pw.encode("utf-8")
-        yield url, data, pw
+# The six census gates. Each runs one kernel.textextract census over
+# OUR parser for every fixture PDF and hash-compares it with the same
+# census walked by the REFERENCE parser (tools/make_oracle.py), both
+# formatted by one shared kernel.fonts / kernel.docmeta line formatter,
+# so each gate compares traversal across two parser stacks on one output
+# contract. All six compare on the reference-parseable set: our kernel
+# additionally opens the AESV3/R6-encrypted fixtures (0020/0021) that
+# the reference cannot parse at all (that capability is pinned by the
+# crypto tests), so those two docs have no reference census to compare
+# against.
+#
+# gate name -> (census function, its output columns after url, the gated
+# projection, the oracle columns)
+_CENSUS_GATES = {
+    # Font-resource census: distinct canonical font lines (resource name
+    # | Subtype | BaseFont | encoding kind | ToUnicode presence) per
+    # document, formatted by kernel.fonts.font_census_line.
+    "extract_pdf_fonts": (
+        textextract.fonts_census, "n_fonts int, census string",
+        ("n_fonts", "md5(census) AS fonts_md5"),
+        "CAST(n_fonts AS INT) AS n_fonts, fonts_md5"),
+    # Document-information metadata (K49): the canonical Info-dict +
+    # annotation-census line (Title/Author/Subject/Creator/Producer/
+    # CreationDate/ModDate + n_annots — text strings decoded per
+    # §7.9.2.2 incl. string DECRYPTION on the encrypted fixtures),
+    # formatted by kernel.docmeta.metadata_line.
+    "extract_pdf_metadata": (
+        textextract.doc_metadata, "meta string",
+        ("md5(meta) AS meta_md5",),
+        "meta_md5"),
+    # Outlink census (K50): URI targets of Link annotations — the outlink
+    # source a crawl pipeline feeds its frontier/link graph from —
+    # formatted through kernel.docmeta.links_line (sorted distinct URIs;
+    # total occurrence count carried separately).
+    "extract_pdf_links": (
+        textextract.doc_links, "n_links int, links string",
+        ("n_links", "md5(links) AS links_md5"),
+        "CAST(n_links AS INT) AS n_links, links_md5"),
+    # XMP packet (K51): the catalog /Metadata stream payload's (length,
+    # md5) through OUR parser's full filter/decrypt chain must byte-match
+    # the reference's resolution. Raw-bytes pinning by design — no XML
+    # parsing on executors (entity-expansion surface), and byte identity
+    # is the stronger cross-stack check anyway.
+    "extract_pdf_xmp": (
+        textextract.doc_xmp, "xmp_bytes int, xmp_md5 string",
+        ("xmp_bytes", "xmp_md5"),
+        "CAST(xmp_bytes AS INT) AS xmp_bytes, xmp_md5"),
+    # Bookmark census (K52): the /Outlines tree walked First/Next in
+    # document order with decoded titles (same shared title-decode rule,
+    # same bounds; cyclic/hostile trees terminate with partial output).
+    "extract_pdf_outline": (
+        textextract.doc_outline, "n_bookmarks int, outline string",
+        ("n_bookmarks", "md5(outline) AS outline_md5"),
+        "CAST(n_bookmarks AS INT) AS n_bookmarks, outline_md5"),
+    # Dublin Core fields (K55): dc:title/dc:creator/dc:description values
+    # scanned from the K51 packet — regex-level and bounded, never an XML
+    # parser (entity decode is arithmetic with a cap) — formatted by
+    # kernel.docmeta.xmp_fields_line.
+    "extract_pdf_xmp_fields": (
+        textextract.doc_xmp_fields, "n_xmp_fields int, fields string",
+        ("n_xmp_fields", "md5(fields) AS xmp_fields_md5"),
+        "CAST(n_xmp_fields AS INT) AS n_xmp_fields, xmp_fields_md5"),
+}
 
 
-def _fixture_pages_with_passwords(spark):
-    """The one census-input preamble (review finding: it was copied
-    into every census query): fixture pages + broadcast password dim,
-    slim projection, stable 4-way repartition."""
-    from ..sources.pages import passwords_df
-
-    return (spark.read.parquet(FIXTURE_PAGES)
-            .join(F.broadcast(passwords_df(spark)), "url", "left")
-            .select("url", "html", "password", "password_is_bytes")
-            .repartition(4, "url"))
-
-
-def _census_batches(row_fn, cols):
-    """mapInPandas generator factory for the census kernels: run
-    ``row_fn(data, password) -> tuple`` per fixture PDF, skipping rows
-    whose parse fails — the try/except shell existed once per census
-    before (review finding)."""
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {c: [] for c in ("url",) + cols}
-            for url, data, pw in _fixture_pdf_rows(pdf):
-                try:
-                    vals = row_fn(data, pw)
-                except Exception:  # noqa: BLE001 - parse failure: no row
-                    continue
-                out["url"].append(url)
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-    return gen
+def _census_row(census):
+    """The census row function: for each %PDF- payload, applies the
+    str-vs-bytes password rule and yields ``(url, *census(parser))``;
+    a document whose parse fails yields no row."""
+    def row(url, html, password, password_is_bytes):
+        if not html.startswith(b"%PDF-"):
+            return
+        if password is not None and password_is_bytes:
+            password = password.encode("utf-8")
+        try:
+            values = census(DocumentParser(html, password=password))
+        except Exception:  # noqa: BLE001 - parse failure: no row
+            return
+        # doc_metadata returns its line bare; the others a tuple
+        yield (url,) + (values if isinstance(values, tuple) else (values,))
+    return row
 
 
-def _fonts_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import fonts_census
-    return fonts_census(DocumentParser(data, password=pw))
+def _census_gate(census, cols, projection):
+    """The census query: fixture pages + broadcast password dim, stable
+    4-way repartition, the census row function, then the gated
+    projection over the reference-parseable urls."""
+    def build(spark, sf_dir):
+        from ..sources.pages import passwords_df
+
+        pages = (spark.read.parquet(FIXTURE_PAGES)
+                 .join(F.broadcast(passwords_df(spark)), "url", "left")
+                 .select("url", "html", "password", "password_is_bytes")
+                 .repartition(4, "url"))
+        census_df = map_rows(pages, _census_row(census), "url string, " + cols)
+        ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
+                  .where("parse_ok").select("url"))
+        return (census_df.join(F.broadcast(ref_ok), "url")
+                .selectExpr("url", *projection))
+    return build
 
 
-def _metadata_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import doc_metadata
-    return (doc_metadata(DocumentParser(data, password=pw)),)
-
-
-def _links_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import doc_links
-    return doc_links(DocumentParser(data, password=pw))
-
-
-def _xmp_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import doc_xmp
-    return doc_xmp(DocumentParser(data, password=pw))
-
-
-def _outline_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import doc_outline
-    return doc_outline(DocumentParser(data, password=pw))
-
-
-def _xmp_fields_row(data, pw):
-    from ..kernel.parser import DocumentParser
-    from ..kernel.textextract import doc_xmp_fields
-    return doc_xmp_fields(DocumentParser(data, password=pw))
-
-
-def extract_pdf_fonts(spark, sf_dir):
-    """Font-resource census parity gate: distinct canonical font lines
-    (resource name | Subtype | BaseFont | encoding kind | ToUnicode
-    presence) per document, walked by OUR parser, must hash-match the
-    same census walked by the REFERENCE parser (tools/make_oracle.py) —
-    both formatted by the one shared kernel.fonts.font_census_line, so
-    the gate compares resource-tree traversal across two parser stacks.
-
-    Compared on the reference-parseable set: our kernel additionally
-    opens the AESV3/R6-encrypted fixtures (0020/0021) that the reference
-    cannot parse at all (that capability is pinned by the crypto tests),
-    so those two docs have no reference census to compare against."""
-    pages = _fixture_pages_with_passwords(spark)
-    census = pages.mapInPandas(
-        _census_batches(_fonts_row, ("n_fonts", "census")),
-        schema="url string, n_fonts int, census string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return (census.join(F.broadcast(ref_ok), "url")
-            .select("url", "n_fonts", F.md5("census").alias("fonts_md5")))
-
-
-PDF_FONTS_SQL = """
-SELECT url, CAST(n_fonts AS INT) AS n_fonts, fonts_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
-
-
-def extract_pdf_metadata(spark, sf_dir):
-    """Document-information metadata gate (K49): the canonical Info-dict
-    + annotation-census line (Title/Author/Subject/Creator/Producer/
-    CreationDate/ModDate + n_annots — text strings decoded per §7.9.2.2
-    incl. string DECRYPTION on the encrypted fixtures) resolved by OUR
-    parser must hash-match the same line resolved by the REFERENCE
-    parser, both formatted by the shared kernel.docmeta.metadata_line.
-    Compared on the reference-parseable set, like the fonts gate."""
-    pages = _fixture_pages_with_passwords(spark)
-    meta = pages.mapInPandas(
-        _census_batches(_metadata_row, ("meta",)),
-        schema="url string, meta string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return (meta.join(F.broadcast(ref_ok), "url")
-            .select("url", F.md5("meta").alias("meta_md5")))
-
-
-PDF_METADATA_SQL = """
-SELECT url, meta_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
-
-
-def extract_pdf_links(spark, sf_dir):
-    """Outlink census gate (K50): URI targets of Link annotations — the
-    outlink source a crawl pipeline feeds its frontier/link graph from —
-    resolved by OUR parser must match the REFERENCE parser's walk, both
-    formatted through the shared kernel.docmeta.links_line (sorted
-    distinct URIs; total occurrence count carried separately)."""
-    pages = _fixture_pages_with_passwords(spark)
-    links = pages.mapInPandas(
-        _census_batches(_links_row, ("n_links", "links")),
-        schema="url string, n_links int, links string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return (links.join(F.broadcast(ref_ok), "url")
-            .select("url", "n_links", F.md5("links").alias("links_md5")))
-
-
-PDF_LINKS_SQL = """
-SELECT url, CAST(n_links AS INT) AS n_links, links_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
-
-
-def extract_pdf_xmp(spark, sf_dir):
-    """XMP packet gate (K51): the catalog /Metadata stream payload's
-    (length, md5) through OUR parser's full filter/decrypt chain must
-    byte-match the REFERENCE parser's resolution. Raw-bytes pinning by
-    design — no XML parsing on executors (entity-expansion surface),
-    and byte identity is the stronger cross-stack check anyway."""
-    pages = _fixture_pages_with_passwords(spark)
-    xmp = pages.mapInPandas(
-        _census_batches(_xmp_row, ("xmp_bytes", "xmp_md5")),
-        schema="url string, xmp_bytes int, xmp_md5 string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return xmp.join(F.broadcast(ref_ok), "url") \
-        .select("url", "xmp_bytes", "xmp_md5")
-
-
-PDF_XMP_SQL = """
-SELECT url, CAST(xmp_bytes AS INT) AS xmp_bytes, xmp_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
-
-
-def extract_pdf_outline(spark, sf_dir):
-    """Bookmark census gate (K52): the /Outlines tree walked First/Next
-    in document order with decoded titles — OUR parser's walk must
-    byte-match the REFERENCE parser's (same shared title-decode rule,
-    same bounds; cyclic/hostile trees terminate with partial output)."""
-    pages = _fixture_pages_with_passwords(spark)
-    ol = pages.mapInPandas(
-        _census_batches(_outline_row, ("n_bookmarks", "outline")),
-        schema="url string, n_bookmarks int, outline string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return (ol.join(F.broadcast(ref_ok), "url")
-            .select("url", "n_bookmarks",
-                    F.md5("outline").alias("outline_md5")))
-
-
-PDF_OUTLINE_SQL = """
-SELECT url, CAST(n_bookmarks AS INT) AS n_bookmarks, outline_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
-
-
-def extract_pdf_xmp_fields(spark, sf_dir):
-    """Dublin Core field gate (K55): dc:title/dc:creator/dc:description
-    values scanned from the K51 packet — regex-level and bounded, never
-    an XML parser (entity decode is arithmetic with a cap) — through
-    OUR parser must match the REFERENCE parser's packet, both
-    formatted by the shared kernel.docmeta.xmp_fields_line."""
-    pages = _fixture_pages_with_passwords(spark)
-    xf = pages.mapInPandas(
-        _census_batches(_xmp_fields_row, ("n_xmp_fields", "fields")),
-        schema="url string, n_xmp_fields int, fields string")
-    ref_ok = (spark.read.parquet(FIXTURE_ORACLE)
-              .where("parse_ok").select("url"))
-    return (xf.join(F.broadcast(ref_ok), "url")
-            .select("url", "n_xmp_fields",
-                    F.md5("fields").alias("xmp_fields_md5")))
-
-
-PDF_XMP_FIELDS_SQL = """
-SELECT url, CAST(n_xmp_fields AS INT) AS n_xmp_fields, xmp_fields_md5
-FROM read_parquet('{oracle}')
-WHERE parse_ok
-""".format(oracle=FIXTURE_ORACLE)
+def _census_sql(oracle_cols):
+    return "SELECT url, %s FROM read_parquet('%s') WHERE parse_ok" % (
+        oracle_cols, FIXTURE_ORACLE)
 
 
 def extract_quarantine_counts(spark, sf_dir):
@@ -415,17 +291,8 @@ _WRAP_NOISY = (
 )
 
 
-def _main_strip_batches(batches):
-    import pandas as pd
-    from pdf4py_spark.kernel.htmlextract import extract_html_main
-
-    for pdf in batches:
-        out = {"url": [], "extracted_utf8": []}
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            out["url"].append(url)
-            out["extracted_utf8"].append(
-                extract_html_main(payload).decode("utf-8"))
-        yield pd.DataFrame(out)
+def _main_strip_row(url, html):
+    yield url, extract_html_main(html).decode("utf-8")
 
 
 def extract_html_main_roundtrip(spark, sf_dir):
@@ -437,8 +304,8 @@ def extract_html_main_roundtrip(spark, sf_dir):
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
         .alias("url"),
         F.encode(F.expr(_WRAP_NOISY), "utf-8").alias("html"))
-    return pages.repartition(8).mapInPandas(
-        _main_strip_batches, schema="url string, extracted_utf8 string")
+    return map_rows(pages.repartition(8), _main_strip_row,
+                    "url string, extracted_utf8 string")
 
 
 EXTRACT_HTML_MAIN_SQL = """
@@ -460,15 +327,10 @@ QUERIES = {
                                       PDF_TEXT_MD5_SQL),
     "extract_pdf_unicode_md5": QuerySpec(extract_pdf_unicode_md5,
                                          PDF_UNICODE_MD5_SQL),
-    "extract_pdf_fonts": QuerySpec(extract_pdf_fonts, PDF_FONTS_SQL),
-    "extract_pdf_metadata": QuerySpec(extract_pdf_metadata,
-                                      PDF_METADATA_SQL),
-    "extract_pdf_links": QuerySpec(extract_pdf_links, PDF_LINKS_SQL),
-    "extract_pdf_xmp": QuerySpec(extract_pdf_xmp, PDF_XMP_SQL),
-    "extract_pdf_outline": QuerySpec(extract_pdf_outline,
-                                     PDF_OUTLINE_SQL),
-    "extract_pdf_xmp_fields": QuerySpec(extract_pdf_xmp_fields,
-                                        PDF_XMP_FIELDS_SQL),
+    **{name: QuerySpec(_census_gate(census, cols, projection),
+                       _census_sql(oracle_cols))
+       for name, (census, cols, projection, oracle_cols)
+       in _CENSUS_GATES.items()},
     "extract_quarantine_counts": QuerySpec(extract_quarantine_counts,
                                            QUARANTINE_SQL),
 }

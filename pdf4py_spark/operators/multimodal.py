@@ -31,11 +31,10 @@ import io
 import struct
 import wave
 
-import pandas as pd
-
 from pyspark.sql import functions as F
 
 from ..kernel.pngcodec import decode_png, encode_png
+from ..plans.pipeline import map_rows
 from . import QuerySpec, table
 
 MEDIA_TYPES = ("image/png", "audio/wav", "video/mp4", "text/plain")
@@ -127,35 +126,17 @@ def media_table(spark, sf_dir):
         .alias("media_type"))
 
 
-def _frame_sample_batches(batches):
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "media_type", "frame_idx", "frame")}
-        for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_type"]):
-            for idx, frame in enumerate(fake_frames(payload, mtype)):
-                out["doc_id"].append(doc_id)
-                out["media_type"].append(mtype)
-                out["frame_idx"].append(idx)
-                out["frame"].append(frame)
-        yield pd.DataFrame(out)
+def _frame_rows(doc_id, payload, media_type):
+    for idx, frame in enumerate(fake_frames(payload, media_type)):
+        yield doc_id, media_type, idx, frame
 
 
-def _wav_decode_batches(batches):
-    """Arrow kernel for the REAL wav path: container synthesis around the
+def _wav_decode_row(doc_id, payload, _media_type):
+    """Row kernel for the REAL wav path: container synthesis around the
     payload-as-PCM, then a genuine stdlib wave decode of those bytes."""
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "n_channels", "sample_width",
-                               "sample_rate", "n_frames", "pcm")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            container = wav_container(bytes(payload))
-            dec = decode_media(container, "audio/wav")
-            out["doc_id"].append(doc_id)
-            out["n_channels"].append(dec["n_channels"])
-            out["sample_width"].append(dec["sample_width"])
-            out["sample_rate"].append(dec["sample_rate"])
-            out["n_frames"].append(dec["n_frames"])
-            out["pcm"].append(dec["pcm"])
-        yield pd.DataFrame(out)
+    dec = decode_media(wav_container(payload), "audio/wav")
+    yield (doc_id, dec["n_channels"], dec["sample_width"],
+           dec["sample_rate"], dec["n_frames"], dec["pcm"])
 
 
 def png_container(payload: bytes, color_type: int) -> bytes:
@@ -169,22 +150,12 @@ def png_container(payload: bytes, color_type: int) -> bytes:
     return encode_png(pixels, PNG_WIDTH, height, color_type)
 
 
-def _png_decode_batches(batches):
-    """Arrow kernel for the REAL png path: container synthesis around the
+def _png_decode_row(doc_id, payload, _media_type):
+    """Row kernel for the REAL png path: container synthesis around the
     payload-as-pixels, then a genuine pngcodec decode of those bytes."""
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "bit_depth",
-                               "color_type", "pixels")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            ctype = 0 if doc_id % 8 == 0 else 2
-            dec = decode_png(png_container(bytes(payload), ctype))
-            out["doc_id"].append(doc_id)
-            out["width"].append(dec["width"])
-            out["height"].append(dec["height"])
-            out["bit_depth"].append(dec["bit_depth"])
-            out["color_type"].append(dec["color_type"])
-            out["pixels"].append(dec["pixels"])
-        yield pd.DataFrame(out)
+    dec = decode_png(png_container(payload, 0 if doc_id % 8 == 0 else 2))
+    yield (doc_id, dec["width"], dec["height"], dec["bit_depth"],
+           dec["color_type"], dec["pixels"])
 
 
 def media_metadata(spark, sf_dir):
@@ -207,12 +178,12 @@ FROM documents
 
 
 def media_frame_sample(spark, sf_dir):
-    """Arrow-batched frame sampling over the media table (the mapInPandas
+    """Arrow-batched frame sampling over the media table (the map_rows
     plumbing for real decoders). The kernel emits raw frame BYTES; size
     and digest are computed JVM-side (octet_length / md5 over lowercase
     hex), so the Python loop does no hashing."""
     media = media_table(spark, sf_dir).repartition(8, "doc_id")
-    frames = media.mapInPandas(_frame_sample_batches, schema=FRAME_SCHEMA)
+    frames = map_rows(media, _frame_rows, FRAME_SCHEMA)
     return frames.select(
         "doc_id", "media_type", "frame_idx",
         F.octet_length("frame").cast("int").alias("frame_bytes"),
@@ -250,7 +221,7 @@ def media_wav_decode(spark, sf_dir):
     media = (media_table(spark, sf_dir)
              .where("media_type = 'audio/wav'")
              .repartition(8, "doc_id"))
-    decoded = media.mapInPandas(_wav_decode_batches, schema=WAV_SCHEMA)
+    decoded = map_rows(media, _wav_decode_row, WAV_SCHEMA)
     return decoded.select(
         "doc_id", "n_channels", "sample_width", "sample_rate", "n_frames",
         F.md5(F.lower(F.hex("pcm"))).alias("pcm_md5"))
@@ -279,7 +250,7 @@ def media_png_decode(spark, sf_dir):
     media = (media_table(spark, sf_dir)
              .where("media_type = 'image/png'")
              .repartition(8, "doc_id"))
-    decoded = media.mapInPandas(_png_decode_batches, schema=PNG_SCHEMA)
+    decoded = map_rows(media, _png_decode_row, PNG_SCHEMA)
     return decoded.select(
         "doc_id", "width", "height", "bit_depth", "color_type",
         F.md5(F.lower(F.hex("pixels"))).alias("pixel_md5"))

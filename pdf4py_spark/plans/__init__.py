@@ -1,5 +1,5 @@
-"""Extraction plan assembly (DataFrame-first; the only Python is the
-Arrow-batched kernel)."""
+"""Extraction plan assembly (DataFrame-first; the only Python map is
+``pipeline.map_rows``, one Arrow-batched ``mapInArrow`` shell)."""
 
 from .pipeline import (  # noqa: F401
     EXTRACT_SCHEMA, extract_pages, extracted_view, lineage_view,

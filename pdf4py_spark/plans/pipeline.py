@@ -1,7 +1,7 @@
 """The extraction pipeline (SURVEY.md §3.4):
 
     scan -> prune -> [anti-join manifest] -> size-salted repartition
-         -> mapInPandas kernel -> extracted/metrics/lineage views
+         -> map_rows kernel (MapInArrow) -> extracted/metrics/lineage views
          -> append sinks + manifest commit
 
 Design notes for 100 TB:
@@ -11,6 +11,9 @@ Design notes for 100 TB:
 * the kernel is one Python invocation per Arrow batch; batch row count is
   bounded by spark.sql.execution.arrow.maxRecordsPerBatch and byte size is
   bounded because partitions are size-homogeneous (functions.size_bucket)
+* every Python map in the engine is ``map_rows``: one ``mapInArrow`` batch
+  loop around a per-row function, so the operators' decode, census and
+  sampling kernels share the extraction kernel's boundary
 * no exception escapes the kernel: bad documents become quarantine rows
   (status != 'ok'), so a 10^12-row job is total
 * resume is keyed on a stable url-hash bucket (never on Spark partition
@@ -27,13 +30,15 @@ import sys
 import time
 import zipimport
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from ..functions import balanced_repartition, dispatch_kind, resume_key
+from ..functions import balanced_repartition, resume_key
 
 #: unified kernel output: extraction result + per-document metrics
 EXTRACT_SCHEMA = (
@@ -44,8 +49,6 @@ EXTRACT_SCHEMA = (
     "n_pages int, bytes_in bigint, bytes_out bigint, wall_ms double, "
     "partition_id int"
 )
-
-_EXTRACT_COLS = [c.split()[0] for c in EXTRACT_SCHEMA.split(", ")]
 
 
 def _drop_zip_importers():
@@ -69,60 +72,56 @@ def _drop_zip_importers():
             cache.pop(path, None)
 
 
-def _make_extract_batches(text_mode: str = "raw"):
-    """The Arrow kernel: one Python call per batch; per row it dispatches
-    the payload to the PDF or HTML path (kernel.extract.extract_document).
+def arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a DDL schema string. Parsing goes through the
+    JVM, so it needs a live session: call it when the plan is built."""
+    return to_arrow_schema(_parse_datatype_string(schema))
 
-    Imported lazily inside the worker so the closure ships only names
-    (plus the text_mode string).
-    """
-    def _extract_batches(batches):
-        from pdf4py_spark.kernel.extract import extract_document
 
+def _row_batches(row_fn, schema: pa.Schema):
+    """The one Arrow batch loop: ``row_fn(*row)`` per input row yields
+    0..n output tuples, and each input batch becomes one output batch
+    typed by ``schema``. Zip importers are dropped once per task."""
+    def batches(it):
         _drop_zip_importers()
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            n = len(pdf.index)
-            if n == 0:
-                continue
-            urls = pdf["url"].tolist()
-            stamps = pdf["warc_ts"].tolist()
-            payloads = pdf["html"].tolist()
-            passwords = pdf["password"].tolist() if "password" in pdf else [None] * n
-            pw_is_bytes = (pdf["password_is_bytes"].tolist()
-                           if "password_is_bytes" in pdf else [False] * n)
-            out = {c: [] for c in _EXTRACT_COLS}
-            for i in range(n):
-                pw = passwords[i]
-                if pw is not None and not isinstance(pw, str):
-                    pw = None  # NaN from a left join
-                if pw is not None and pw_is_bytes[i]:
-                    pw = pw.encode("utf-8")
-                r = extract_document(payloads[i], pw, text_mode)
-                out["url"].append(urls[i])
-                out["warc_ts"].append(stamps[i])
-                out["doc_kind"].append(r.doc_kind)
-                out["extracted"].append(r.extracted)
-                out["extracted_utf8"].append(
-                    r.extracted.decode("utf-8", "replace")
-                    if r.extracted is not None else None)
-                out["status"].append(r.status)
-                out["error"].append(r.error)
-                out["n_objects"].append(r.n_objects)
-                out["n_xref_sections"].append(r.n_xref_sections)
-                out["n_compressed_objects"].append(r.n_compressed_objects)
-                out["filters"].append(r.filters)
-                out["decrypt_hit"].append(r.decrypt_hit)
-                out["parse_ok"].append(r.parse_ok)
-                out["n_pages"].append(r.n_pages)
-                out["bytes_in"].append(r.bytes_in)
-                out["bytes_out"].append(r.bytes_out)
-                out["wall_ms"].append(r.wall_ms)
-                out["partition_id"].append(pid)
-            yield pd.DataFrame(out)
+        for batch in it:
+            cols = [c.to_pylist() for c in batch.columns]
+            rows = [out for row in zip(*cols) for out in row_fn(*row)]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, type=field.type)
+                     for col, field in zip(zip(*rows), schema)],
+                    schema=schema)
+    return batches
 
-    return _extract_batches
+
+def map_rows(df: DataFrame, row_fn, schema: str) -> DataFrame:
+    """The engine's only Python map (``mapInArrow``, one Python call per
+    Arrow batch): ``row_fn`` sees the columns of ``df`` as Python values
+    and yields output tuples in the order of the DDL ``schema``."""
+    return df.mapInArrow(_row_batches(row_fn, arrow_schema(schema)), schema)
+
+
+def _extract_row(text_mode: str = "raw"):
+    """The extraction row function: dispatches each payload to the PDF or
+    HTML path (kernel.extract.extract_document) and yields the
+    ``EXTRACT_SCHEMA`` values. The closure pickles the kernel entry point
+    by reference, so it ships only names (plus the text_mode string)."""
+    from ..kernel.extract import extract_document
+
+    def row(url, warc_ts, html, password=None, password_is_bytes=False):
+        if password is not None and password_is_bytes:
+            password = password.encode("utf-8")
+        r = extract_document(html, password, text_mode)
+        ctx = TaskContext.get()
+        yield (url, warc_ts, r.doc_kind, r.extracted,
+               r.extracted.decode("utf-8", "replace")
+               if r.extracted is not None else None,
+               r.status, r.error, r.n_objects, r.n_xref_sections,
+               r.n_compressed_objects, r.filters, r.decrypt_hit, r.parse_ok,
+               r.n_pages, r.bytes_in, r.bytes_out, r.wall_ms,
+               ctx.partitionId() if ctx is not None else -1)
+    return row
 
 
 def extract_pages(pages: DataFrame, num_partitions: int = None,
@@ -133,7 +132,7 @@ def extract_pages(pages: DataFrame, num_partitions: int = None,
 
     Columns are pruned to what the kernel reads (scan-level pruning),
     passwords broadcast-joined (tiny dimension), then the size-salted
-    repartition feeds the Arrow kernel.
+    repartition feeds the Arrow kernel (``map_rows``).
     """
     cols = ["url", "warc_ts", "html"]
     slim = pages.select(*cols)
@@ -147,8 +146,7 @@ def extract_pages(pages: DataFrame, num_partitions: int = None,
         # over every core instead of leaving one straggler with several
         num_partitions = slim.sparkSession.sparkContext.defaultParallelism * 8
     balanced = balanced_repartition(slim, num_partitions)
-    return balanced.mapInPandas(_make_extract_batches(text_mode),
-                                schema=EXTRACT_SCHEMA)
+    return map_rows(balanced, _extract_row(text_mode), EXTRACT_SCHEMA)
 
 
 def extracted_view(result: DataFrame) -> DataFrame:

@@ -5,6 +5,10 @@
 from binascii import unhexlify
 
 import pytest
+from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+from cryptography.hazmat.primitives import padding
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+from hypothesis import given, settings, strategies as st
 
 from pdf4py_spark.kernel.crypto import (
     INV_SBOX, SBOX, aes_cbc_decrypt, aes_cbc_encrypt, expand_key, rc4_apply,
@@ -96,3 +100,54 @@ def test_saslprep_vectors():
     assert saslprep("Ⅸ") == "IX"
     with pytest.raises(KernelError):
         saslprep("")
+
+
+# In-box differential legs: AES-CBC (both ways) and ARC4 against the
+# ``cryptography`` package, so they run without the reference tree.
+_AES_KEYS = st.sampled_from([16, 24, 32]).flatmap(
+    lambda n: st.binary(min_size=n, max_size=n))
+_IVS = st.binary(min_size=16, max_size=16)
+_BLOCKS = st.integers(0, 6).flatmap(
+    lambda n: st.binary(min_size=16 * n, max_size=16 * n))
+
+
+def _openssl_cbc(key, iv, data, encrypt):
+    cipher = Cipher(algorithms.AES(key), modes.CBC(iv))
+    ctx = cipher.encryptor() if encrypt else cipher.decryptor()
+    return ctx.update(data) + ctx.finalize()
+
+
+@settings(max_examples=60, deadline=None)
+@given(_BLOCKS, _AES_KEYS, _IVS)
+def test_cbc_decrypt_matches_cryptography(data, key, iv):
+    assert aes_cbc_decrypt(data, key, iv, unpad=False) == \
+        _openssl_cbc(key, iv, data, encrypt=False)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_BLOCKS, _AES_KEYS, _IVS)
+def test_cbc_encrypt_matches_cryptography(data, key, iv):
+    assert aes_cbc_encrypt(data, key, iv, pad=False) == \
+        _openssl_cbc(key, iv, data, encrypt=True)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.binary(max_size=80), _AES_KEYS, _IVS)
+def test_cbc_encrypt_pads_pkcs7(data, key, iv):
+    padder = padding.PKCS7(128).padder()
+    padded = padder.update(data) + padder.finalize()
+    assert aes_cbc_encrypt(data, key, iv) == \
+        _openssl_cbc(key, iv, padded, encrypt=True)
+
+
+# ARC4 in ``cryptography`` accepts only these key sizes (bits); they
+# cover the 40-128-bit range of the PDF standard security handler
+_RC4_KEYS = st.sampled_from(sorted(ARC4.key_sizes)).flatmap(
+    lambda bits: st.binary(min_size=bits // 8, max_size=bits // 8))
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.binary(max_size=300), _RC4_KEYS)
+def test_rc4_matches_cryptography(data, key):
+    assert rc4_apply(data, key) == \
+        Cipher(ARC4(key), mode=None).encryptor().update(data)

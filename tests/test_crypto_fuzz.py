@@ -1,5 +1,6 @@
 """Differential fuzz: RC4 and AES-CBC versus the reference implementations
-on random keys/payloads."""
+on random keys/payloads. The same primitives also have in-box legs
+against the ``cryptography`` package in tests/test_crypto.py."""
 
 import os
 import sys

@@ -1,10 +1,17 @@
 """Filter golden vectors, ported from the reference suite
 (/root/reference/tests/decoders_unit_tests.py, unit_tests.py:328-338)
-plus new LZW vectors (the reference has no LZW — TODO.md:10)."""
+plus new LZW vectors (the reference has no LZW — TODO.md:10), plus
+in-box differential legs against the standard library (zlib, base64's
+Ascii85 and binascii's hex codec) that run without the reference tree.
+LZW, RunLength and the predictors have no standard-library twin: their
+differential legs stay reference-only (tests/test_filters_fuzz.py)."""
 
+import base64
+import binascii
 import zlib
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from pdf4py_spark.kernel.filters import (
     ascii85_decode, asciihex_decode, flate_decode, lzw_decode,
@@ -217,3 +224,35 @@ def test_lzw_iso32000_worked_example():
     assert encoded == bytes.fromhex("800B6050220C0C8501")  # pin the bytes
     assert lzw_decode(encoded, {}) == bytes(
         [0x2D] * 5 + [0x41] + [0x2D] * 3 + [0x42])
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.binary(max_size=2000), st.integers(0, 9))
+def test_flate_matches_zlib(raw, level):
+    assert flate_decode(zlib.compress(raw, level), {}) == raw
+
+
+# the kernel keeps the reference's Ascii85 quirks (no 'z' group, short
+# final groups decoded positionally, leading zero bytes of a group
+# dropped), so the leg draws whole 4-byte groups with a nonzero first
+# byte: the domain on which the quirky loop is the standard codec
+_A85_GROUPS = st.lists(
+    st.tuples(st.integers(1, 255), st.binary(min_size=3, max_size=3)),
+    max_size=60).map(lambda gs: b"".join(bytes([a]) + b for a, b in gs))
+
+
+@settings(max_examples=100, deadline=None)
+@given(_A85_GROUPS)
+def test_ascii85_matches_base64(raw):
+    # a PDF stream carries the body and the '~>' EOD marker, not '<~'
+    encoded = base64.a85encode(raw, adobe=True)
+    assert encoded.startswith(b"<~")
+    assert ascii85_decode(encoded[2:], {}) == raw
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.binary(max_size=500), st.booleans())
+def test_asciihex_matches_binascii(raw, upper):
+    digits = binascii.hexlify(raw)
+    assert asciihex_decode((digits.upper() if upper else digits) + b">",
+                           {}) == raw

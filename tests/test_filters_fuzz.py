@@ -1,5 +1,10 @@
 """Differential fuzz for the filter kernels versus the reference decoders
-(random parameters + payloads; identical outputs or identical failure)."""
+(random parameters + payloads; identical outputs or identical failure).
+
+LZW, RunLength and the PNG/TIFF predictors are differentially checked
+here only, against the reference: the standard library has no twin for
+them. Flate, Ascii85 and ASCIIHex also have in-box legs against zlib,
+base64 and binascii in tests/test_filters.py."""
 
 import os
 import sys

@@ -275,8 +275,8 @@ def test_media_frame_digest_is_jvm_side(spark, queries):
     appearing in the JVM plan above the Arrow kernel."""
     plan = (queries["media_frame_sample"].fn(spark, SF)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "md5(" in plan and "MapInPandas" in plan
-    assert plan.index("md5(") < plan.index("MapInPandas"), \
+    assert "md5(" in plan and "MapInArrow" in plan
+    assert plan.index("md5(") < plan.index("MapInArrow"), \
         "digest must sit above (after) the kernel, JVM-side"
 
 

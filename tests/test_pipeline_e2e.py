@@ -95,27 +95,31 @@ def test_plan_hygiene(spark, tmp_path):
     result = extract_pages(pages, num_partitions=2)
     assert_no_per_row_python(result)
     plan = result._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     # the scan must read only the kernel's columns, not text/lang
     scan_line = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_line, plan
     assert "text" not in scan_line[0] and "lang" not in scan_line[0]
 
 
-def test_kernel_task_drops_zip_importers(tmp_path):
-    """An extraction task deletes every zipimporter from
+def test_kernel_task_drops_zip_importers(spark, tmp_path):
+    """A kernel task deletes every zipimporter from
     sys.path_importer_cache (so the next task's importlib.invalidate_caches()
     in a reused worker does not re-read each archive); the row extracts as
-    before and modules in the zip still import."""
+    before and modules in the zip still import. Drives the map_rows batch
+    loop directly; ``spark`` is requested because parsing the output
+    schema goes through the JVM."""
     import datetime
     import sys
     import zipfile
     import zipimport
 
-    import pandas as pd
+    import pyarrow as pa
 
     from pdf4py_spark.kernel.extract import extract_document
-    from pdf4py_spark.plans.pipeline import _make_extract_batches
+    from pdf4py_spark.plans.pipeline import (
+        EXTRACT_SCHEMA, _extract_row, _row_batches, arrow_schema,
+    )
 
     archive = str(tmp_path / "probe.zip")
     with zipfile.ZipFile(archive, "w") as zf:
@@ -128,15 +132,19 @@ def test_kernel_task_drops_zip_importers(tmp_path):
                           zipimport.zipimporter)
         html = (b"<html><body><nav>Home</nav><article><h2>Zip cache</h2>"
                 b"<p>One row through the kernel.</p></article></body></html>")
-        batch = pd.DataFrame({"url": ["crawl://html/zip-probe"],
-                              "warc_ts": [datetime.datetime(2026, 1, 1)],
-                              "html": [html]})
-        out = pd.concat(list(_make_extract_batches("raw")(iter([batch]))))
+        stamp = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+        batch = pa.RecordBatch.from_pydict({
+            "url": ["crawl://html/zip-probe"],
+            "warc_ts": pa.array([stamp], pa.timestamp("us", tz="UTC")),
+            "html": pa.array([html], pa.binary())})
+        loop = _row_batches(_extract_row("raw"), arrow_schema(EXTRACT_SCHEMA))
+        out = pa.Table.from_batches(list(loop(iter([batch])))).to_pylist()
         expected = extract_document(html, None, "raw")
         assert len(out) == 1
-        row = out.iloc[0]
+        row = out[0]
         assert expected.status == "ok" and row["status"] == "ok"
         assert row["extracted"] == expected.extracted
+        assert row["warc_ts"] == stamp
         assert row["partition_id"] == -1
         assert not any(isinstance(f, zipimport.zipimporter)
                        for f in sys.path_importer_cache.values())
@@ -147,6 +155,53 @@ def test_kernel_task_drops_zip_importers(tmp_path):
         sys.path_importer_cache.pop(archive, None)
         sys.modules.pop("_zip_probe_first", None)
         sys.modules.pop("_zip_probe_second", None)
+
+
+def test_warc_ts_passes_through_kernel(spark):
+    """warc_ts crosses the Python boundary unchanged (tz-aware Arrow
+    timestamps in and out): microseconds, pre-1970 and null all survive."""
+    html = b"<html><body><article><p>stamp</p></article></body></html>"
+    pages = spark.createDataFrame(
+        [("crawl://ts/micro", "2026-03-04 05:06:07.123456", bytearray(html)),
+         ("crawl://ts/pre-epoch", "1969-07-20 20:17:40.000001",
+          bytearray(html)),
+         ("crawl://ts/null", None, bytearray(html))],
+        "url string, ts string, html binary",
+    ).select("url", F.col("ts").cast("timestamp").alias("warc_ts"), "html")
+    expected = pages.select("url", "warc_ts")
+    got = extract_pages(pages, num_partitions=2).select("url", "warc_ts")
+    assert got.count() == 3
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
+def test_map_rows_is_the_only_python_map():
+    """Source pin: one mapInArrow call site (plans.pipeline.map_rows), no
+    mapInPandas under pdf4py_spark/, and no pandas import on the kernel
+    shell's modules."""
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "pdf4py_spark")
+    sources = {}
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    sources[os.path.relpath(path, pkg)] = fh.read()
+    calls = {p: s.count(".mapInArrow(") for p, s in sources.items()}
+    assert {p: n for p, n in calls.items() if n} == {
+        os.path.join("plans", "pipeline.py"): 1}
+    assert not [p for p, s in sources.items() if "mapInPandas" in s]
+    pandas_import = re.compile(r"^\s*(import pandas|from pandas)\b", re.M)
+    shell = [p for p in sources
+             if p.startswith("plans" + os.sep)
+             or p in (os.path.join("operators", "extraction_queries.py"),
+                      os.path.join("operators", "multimodal.py"))]
+    assert len(shell) >= 4
+    assert not [p for p in shell if pandas_import.search(sources[p])]
+
 
 def test_views_and_rollups(spark, extraction):
     ext = extracted_view(extraction)

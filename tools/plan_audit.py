@@ -10,7 +10,7 @@ Columns:
   nlj         BroadcastNestedLoopJoin (allowed only at the declared sites)
   cartesian   CartesianProduct (must be 0 everywhere)
   py          BatchEvalPython / per-row Python (must be 0; ArrowEvalPython
-              and mapInPandas kernels are the sanctioned path)
+              and the map_rows (MapInArrow) kernels are the sanctioned path)
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
 """
